@@ -246,9 +246,8 @@ def _maybe_register_tws(fn):
             """,
             doc="Stateful streaming via transformWithStateInPandas (Spark >=4.0), "
             "the successor API to q74's applyInPandasWithState: per-user "
-            "ValueState running (count, min, max).  RocksDB-backed state at "
-            "scale; oracle = batch aggregate (single-replay drain emits final "
-            "state).",
+            "ValueState running (count, min, max).  Oracle = batch aggregate "
+            "(single-replay drain emits final state).",
         )(fn)
     return fn
 

@@ -151,7 +151,7 @@ def _reservoir_keyed(df: DataFrame) -> DataFrame:
     "Plan/scale: per-key state is O(k); each micro-batch shuffles once "
     "on event_type; at 100 TB/day the same operator sustains "
     "arbitrarily many keys because state never exceeds k rows per key "
-    "(RocksDB-backed in production, q163's state-reader audits it).",
+    "(q163's state-reader audits it).",
 )
 def q340_stream_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout

@@ -164,8 +164,8 @@ def _q394_oracle(cmp: str) -> str:
     "q146/q159 stream-stream-join oracle discipline applied to session "
     "state.  A forced multi-split replay test (time-sliced files, "
     "pinned mtimes) proves the emitted set is batch-boundary-"
-    "independent; at 100 TB this operator is RocksDB-backed session "
-    "state keyed by user, one shuffle on the grouping key.",
+    "independent; session state is keyed by user, one shuffle on the "
+    "grouping key.",
 )
 def q394_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import run_to_memory

@@ -34,6 +34,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+# Spark's checkpoint file manager over the Hadoop FileSystem API (see tune()).
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 _SHIPPED: set[str] = set()
 
@@ -87,6 +91,21 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
             # real cluster at 100 TB the 128 MB default is correct (4 MB
             # there would mean ~25M tasks).
             spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+            # Checkpoint commits (offset/commit logs, state-store deltas) go
+            # through Spark's FileSystem-based manager.  The default
+            # FileContext one on file:// checks link status on every rename
+            # and creates files with an explicit permission; without a
+            # native libhadoop each of those forks `readlink` or `chmod`, so
+            # a stateful micro-batch spawned hundreds of processes and its
+            # state commit dominated the batch.  On a local disk rename is
+            # atomic (POSIX), so the FileSystem rename is safe.  LOCAL ONLY:
+            # a cluster keeps Spark's default manager for its object stores.
+            # Not done, measured: fs.file.impl=RawLocalFileSystem saves a bit
+            # more but breaks the RocksDB state store (its file manager casts
+            # the local FS to LocalFileSystem), and as a runtime conf it only
+            # takes effect with fs.file.impl.disable.cache=true, which makes
+            # every getFileSystem call build a new instance.
+            spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", FS_CHECKPOINT_MANAGER)
     except Exception:
         pass
     _ship_package(spark)
@@ -100,19 +119,22 @@ def get_spark(
 ) -> SparkSession:
     """Build a tuned local session.
 
-    Honors SPARK_GRAFT_CPUS for core count (bench contract).  On a real
-    cluster, drop `master` and submit normally; every conf here is still
-    appropriate.
+    Honors SPARK_GRAFT_CPUS for core count (bench contract) and
+    SPARK_DRIVER_MEMORY for the heap (default: half of physical RAM, 1g-32g).
+    On a real cluster, drop `master` and submit normally; every conf here is
+    still appropriate.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", f"{max(1, min(32, ram_gb // 2))}g")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

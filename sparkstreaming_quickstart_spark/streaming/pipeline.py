@@ -7,9 +7,10 @@ store), which fixes the reference's recovery bug by construction -- a restored
 query always has its sink attached (vs Processor.java:48-54, where the
 checkpoint factory registers no output operation).
 
-At 100 TB: use the RocksDB state store provider for windowed/stateful state,
-watermarks bound state size, and `availableNow` gives drain-and-stop backfill
-runs with the same code path as continuous processing.
+Watermarks bound state size, and `availableNow` gives drain-and-stop
+backfill runs with the same code path as continuous processing.  The
+operators compose: a chain carries one watermark, set by its first
+event-time operator (Spark 4 refuses to redefine it).
 """
 
 from __future__ import annotations
@@ -118,10 +119,20 @@ def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str =
     return table
 
 
+def _watermarked(stream: DataFrame, delay: str) -> DataFrame:
+    """`stream` with a watermark on ts, unless it already carries one (an
+    upstream operator's): Spark 4 rejects a redefined watermark.  Spark marks
+    a watermarked column with this metadata key (EventTimeWatermark.delayKey)."""
+    if any("spark.watermarkDelayMs" in f.metadata for f in stream.schema.fields):
+        return stream
+    return stream.withWatermark("ts", delay)
+
+
 def tumbling_counts(stream: DataFrame, window_size: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window aggregation with watermarking."""
+    """Tumbling event-time window aggregation with watermarking (`watermark`
+    applies only when the input carries none)."""
     return (
-        stream.withWatermark("ts", watermark)
+        _watermarked(stream, watermark)
         .groupBy(F.window("ts", window_size).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -139,7 +150,7 @@ def tumbling_counts(stream: DataFrame, window_size: str = "1 hour", watermark: s
 def sliding_counts(stream: DataFrame, size: str = "2 hours", slide: str = "1 hour") -> DataFrame:
     """Sliding event-time windows (each event lands in size/slide windows)."""
     return (
-        stream.withWatermark("ts", "4 hours")
+        _watermarked(stream, "4 hours")
         .groupBy(F.window("ts", size, slide).alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")

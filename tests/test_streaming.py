@@ -127,9 +127,8 @@ def test_rate_stream_smoke(spark):
 
 
 def test_rocksdb_state_store_matches_default(spark, sf_dir):
-    # The 100 TB streaming-state answer is the RocksDB state store (state
-    # spills off-heap/disk instead of living on the JVM heap).  Same query,
-    # same results, under both providers.
+    # The RocksDB state store (state off the JVM heap) is a drop-in
+    # provider: same query, same results, under both providers.
     from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory, tumbling_counts
     from sparkstreaming_quickstart_spark.streaming.source import events_stream
 
@@ -553,3 +552,134 @@ def test_streaming_restart_with_added_projection_continues_from_checkpoint(spark
         )
     }
     assert got == want
+
+
+def _checkpoint_manager(spark, path: str) -> str:
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), conf
+    )
+    return manager.getClass().getName()
+
+
+def test_local_session_commits_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Local sessions write checkpoints through Spark's FileSystem-based
+    manager, both when get_spark built the session and when tune() is
+    applied to a session that did not have it (the driver-owned route)."""
+    from sparkstreaming_quickstart_spark.session import FS_CHECKPOINT_MANAGER, tune
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert _checkpoint_manager(spark, str(tmp_path)) == FS_CHECKPOINT_MANAGER
+    spark.conf.unset(key)
+    try:
+        assert _checkpoint_manager(spark, str(tmp_path)) != FS_CHECKPOINT_MANAGER
+    finally:
+        tune(spark)
+    assert _checkpoint_manager(spark, str(tmp_path)) == FS_CHECKPOINT_MANAGER
+
+
+def _drain_window_updates(stream, checkpoint: str, final: dict | None = None) -> dict:
+    """Run `stream` (an update-mode window aggregation) to the end of its
+    input with availableNow; fold every emitted row into `final`, keyed by
+    (window_start, event_type), so the last update of a window wins."""
+    final = {} if final is None else final
+
+    def sink(df, epoch_id):
+        for r in df.collect():
+            final[(r.window_start, r.event_type)] = (r.n_events, r.sum_value)
+
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return final
+
+
+def test_dedup_then_tumbling_composes_under_default_confs(spark, sf_dir, tmp_path):
+    """streaming_dedup -> tumbling_counts (and -> sliding_counts) run under
+    Spark 4's default multi-operator watermarks: the chain carries dedup's
+    single watermark, and the counts equal the batch answer."""
+    from sparkstreaming_quickstart_spark.functions.money import dec
+    from sparkstreaming_quickstart_spark.streaming.pipeline import sliding_counts, streaming_dedup
+
+    assert spark.conf.get("spark.sql.streaming.statefulOperator.allowMultiple") == "true"
+    deduped = streaming_dedup(events_stream(spark, sf_dir), ["event_id"], watermark="3650 days")
+    got = _drain_window_updates(tumbling_counts(deduped, "1 hour"), str(tmp_path / "ck"))
+    batch = load_table(spark, sf_dir, "events").dropDuplicates(["event_id"])
+    want = {
+        (r.window_start, r.event_type): (r.n_events, r.sum_value)
+        for r in batch.groupBy(F.window("ts", "1 hour").start.alias("window_start"), "event_type")
+        .agg(F.count("*").alias("n_events"), F.sum(dec("value")).cast("double").alias("sum_value"))
+        .collect()
+    }
+    assert got == want and len(got) > 0
+
+    slid = sliding_counts(streaming_dedup(events_stream(spark, sf_dir), ["event_id"], watermark="3650 days"))
+    n = spark.table(run_to_memory(slid, output_mode="complete")).agg(F.sum("n_events")).first()[0]
+    assert n == 2 * batch.count()  # 2 h windows sliding by 1 h: two windows per event
+
+
+def test_stateful_restart_mid_stream_matches_uninterrupted_run(spark, tmp_path):
+    """Crash-free restart in the middle of a stream: dedup -> tumbling window
+    over files A, stop, add files B (new events plus exact duplicates of A's),
+    restart on the same checkpoint.  The restarted query re-reads the state
+    it committed (dedup keys and partial window counts), so the final
+    per-window counts equal one uninterrupted run over A+B."""
+    import datetime
+    import os
+
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from sparkstreaming_quickstart_spark.streaming.pipeline import streaming_dedup
+
+    schema = StructType(
+        [
+            StructField("event_id", LongType()),
+            StructField("ts", TimestampType()),
+            StructField("user_id", LongType()),
+            StructField("event_type", StringType()),
+            StructField("value", DoubleType()),
+        ]
+    )
+    t0 = datetime.datetime(2024, 1, 1, 10, 0)
+
+    def event(i):
+        ts = t0 + datetime.timedelta(minutes=7 * i)
+        return (i, ts, i % 5, ("click", "view", "purchase")[i % 3], round(1.25 * i, 2))
+
+    a = [event(i) for i in range(0, 40)]
+    b = [event(i) for i in range(40, 80)] + [event(i) for i in range(0, 40, 3)]
+    src = tmp_path / "src"
+
+    def write(name, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / name))
+
+    def chain():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(os.path.join(src, "*"))
+        deduped = streaming_dedup(stream, ["event_id"], watermark="1 day")
+        return tumbling_counts(deduped, "1 hour")
+
+    write("a0", a[:20])
+    write("a1", a[20:])
+    ckpt = str(tmp_path / "ck")
+    restarted = _drain_window_updates(chain(), ckpt)
+    write("b0", b[:27])
+    write("b1", b[27:])
+    restarted = _drain_window_updates(chain(), ckpt, restarted)
+    assert any(p.endswith(".delta") for _d, _s, fs in os.walk(os.path.join(ckpt, "state")) for p in fs)
+
+    uninterrupted = _drain_window_updates(chain(), str(tmp_path / "ck-once"))
+    assert restarted == uninterrupted
+    assert sum(n for n, _s in uninterrupted.values()) == 80
