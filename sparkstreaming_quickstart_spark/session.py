@@ -3,14 +3,20 @@
 Two situations:
   * We own the session (bench.py, tests, CLI): build it with `get_spark()`.
   * The driver owns the session (`__spark_entry__.entry/queries`): we may only
-    set *runtime-settable* SQL confs -> `tune()` is safe to call on any session
-    and is idempotent.
+    set *runtime-settable* SQL confs.
 
-Scale notes (100 TB): AQE handles runtime partition coalescing and skew-join
-splitting, so a static `spark.sql.shuffle.partitions` only needs to be an
-upper bound (set ~2-3x total cores on a real cluster).  Arrow execution is on
-for every pandas interchange.  All timestamps are UTC so results are
-independent of cluster timezone.
+`tune()` is the one place package confs are applied, in both situations.  It
+runs again on every table load, so it holds only what the package needs
+everywhere, and only what Spark would not set by itself.  `get_spark` adds
+what must be fixed before the JVM starts (master, heap, UI) and the
+broadcast-join threshold of the sessions it builds: a starting value that a
+caller may change, which `tune()` would reset.  Split sizing is Spark's own:
+a file scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))`
+per task, so small tables stay one split and a backlog of many small stream
+files packs into about one task per core.  AQE (partition coalescing,
+skew-join splitting) is on by Spark's default, so a static
+`spark.sql.shuffle.partitions` only needs to be an upper bound.  All
+timestamps are UTC so results are independent of cluster timezone.
 """
 
 from __future__ import annotations
@@ -22,11 +28,9 @@ import zipfile
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied to any session we touch.  Keys must all be
-# modifiable after session start (verified: none of these are static confs).
+# modifiable after session start, and each value must differ from Spark's
+# default (tests/test_streaming.py checks both).
 RUNTIME_CONFS: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # The driver testdata stores events.ts as parquet TIMESTAMP(NANOS), which
@@ -75,7 +79,8 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply runtime confs to an externally-owned session (idempotent)."""
+    """Apply this package's runtime confs to any session, owned or not
+    (idempotent)."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -85,12 +90,10 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         if spark.sparkContext.master.startswith("local"):
-            # Local mode reads small single-file tables: the default 128 MB
-            # split size leaves a 32-core box 3-way parallel on a 10 MB
-            # parquet.  4 MB splits restore parallelism.  LOCAL ONLY -- on a
-            # real cluster at 100 TB the 128 MB default is correct (4 MB
-            # there would mean ~25M tasks).
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+            # Split sizing stays Spark's here too: its rule already keeps a
+            # small table one split and packs a backlog of small stream files
+            # into about one task per core, where a fixed small cap would make
+            # each file its own task.
             # Checkpoint commits (offset/commit logs, state-store deltas) go
             # through Spark's FileSystem-based manager.  The default
             # FileContext one on file:// checks link status on every rename
@@ -130,16 +133,13 @@ def get_spark(
         shuffle_partitions = max(cpus, 8)
     ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", f"{max(1, min(32, ram_gb // 2))}g")
-    b = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .getOrCreate()
     )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune(spark, shuffle_partitions)

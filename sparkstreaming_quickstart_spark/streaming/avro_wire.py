@@ -48,14 +48,32 @@ MAGIC = 0
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
     shift = 0
     acc = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
+    try:
+        while True:
+            b = buf[pos]
+            pos += 1
+            acc |= (b & 0x7F) << shift
+            if not b & 0x80:
+                break
+            shift += 7
+    except IndexError:
+        raise ValueError(f"truncated Avro data: varint runs past byte {len(buf)}") from None
     return (acc >> 1) ^ -(acc & 1), pos  # zigzag decode
+
+
+def _take(buf: bytes, pos: int, n: int) -> bytes:
+    """The `n` bytes at `pos`; a length past the end is malformed input."""
+    end = pos + n
+    if n < 0 or end > len(buf):
+        raise ValueError(f"truncated Avro data: {n} bytes at {pos} past the end ({len(buf)})")
+    return bytes(buf[pos:end])
+
+
+def _index(seq: list, idx: int, what: str) -> Any:
+    """`seq[idx]` for a decoded union branch or enum index (no negatives)."""
+    if not 0 <= idx < len(seq):
+        raise ValueError(f"{what} index {idx} outside the schema's {len(seq)}")
+    return seq[idx]
 
 
 def _write_varint(n: int) -> bytes:
@@ -86,21 +104,21 @@ def decode(buf: bytes, schema: Any, pos: int = 0) -> tuple[Any, int]:
     schema = _norm(schema)
     if isinstance(schema, list):  # union: varint branch index then value
         branch, pos = _read_varint(buf, pos)
-        return decode(buf, schema[branch], pos)
+        return decode(buf, _index(schema, branch, "union branch"), pos)
     if isinstance(schema, str):
         if schema == "null":
             return None, pos
         if schema == "boolean":
-            return buf[pos] == 1, pos + 1
+            return _take(buf, pos, 1) == b"\x01", pos + 1
         if schema in ("int", "long"):
             return _read_varint(buf, pos)
         if schema == "float":
-            return struct.unpack_from("<f", buf, pos)[0], pos + 4
+            return struct.unpack("<f", _take(buf, pos, 4))[0], pos + 4
         if schema == "double":
-            return struct.unpack_from("<d", buf, pos)[0], pos + 8
+            return struct.unpack("<d", _take(buf, pos, 8))[0], pos + 8
         if schema in ("bytes", "string"):
             ln, pos = _read_varint(buf, pos)
-            raw = bytes(buf[pos : pos + ln])
+            raw = _take(buf, pos, ln)
             return (raw.decode("utf-8") if schema == "string" else raw), pos + ln
         raise ValueError(f"unsupported primitive: {schema}")
     t = schema["type"]
@@ -111,10 +129,10 @@ def decode(buf: bytes, schema: Any, pos: int = 0) -> tuple[Any, int]:
         return rec, pos
     if t == "enum":
         idx, pos = _read_varint(buf, pos)
-        return schema["symbols"][idx], pos
+        return _index(schema["symbols"], idx, "enum"), pos
     if t == "fixed":
         ln = schema["size"]
-        return bytes(buf[pos : pos + ln]), pos + ln
+        return _take(buf, pos, ln), pos + ln
     if t in ("array", "map"):
         items: Any = [] if t == "array" else {}
         while True:
@@ -188,8 +206,12 @@ def wire_encode(schema_id: int, value: Any, schema: Any) -> bytes:
 
 
 def wire_decode(buf: bytes, schema_map: dict[int, Any]) -> tuple[int, Any]:
-    """Resolve the writer schema from the wire header, decode the body."""
-    if not buf or buf[0] != MAGIC:
+    """Resolve the writer schema from the wire header, decode the body.
+    Malformed input (short header, bad magic byte, truncated body, an index
+    outside the schema) raises ValueError naming the cause."""
+    if len(buf) < 5:
+        raise ValueError(f"not Confluent wire format ({len(buf)} bytes, shorter than the 5-byte header)")
+    if buf[0] != MAGIC:
         raise ValueError("not Confluent wire format (bad magic byte)")
     schema_id = int.from_bytes(buf[1:5], "big")
     if schema_id not in schema_map:

@@ -90,8 +90,10 @@ def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str =
     untuned session (shuffle.partitions=200) a stateful drain pays 200 state
     stores x per-batch task overhead on a 32-core box -- measured 31s -> ~5s
     for the stream-stream full-outer join.  Cap state partitions at the
-    core count for the drain, restore the caller's setting after.  On a real
-    cluster the cap is total-cores, set once in session config instead.
+    core count for the query.  The query runs on its own clone of the
+    session conf, taken in `start()`, so the caller's setting is restored as
+    soon as `start()` returns.  On a real cluster the cap is total-cores,
+    set once in session config instead.
     """
     spark = stream.sparkSession
     cores = spark.sparkContext.defaultParallelism
@@ -113,9 +115,9 @@ def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str =
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
+    q.awaitTermination()
     return table
 
 

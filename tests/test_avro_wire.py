@@ -248,3 +248,52 @@ def test_schema_registry_fetcher_resolves_ids_end_to_end(spark):
     out = {r.k: r for r in decode_confluent_avro(df, reader, smap).collect()}
     assert (out[1].name, out[1].age, out[1].email, out[1].schema_id) == ("ada", 36, None, 7)
     assert (out[2].name, out[2].age, out[2].email, out[2].schema_id) == ("grace", 45, "g@x.io", 9)
+
+
+# Malformed wire input is rejected with a ValueError naming the cause, never
+# misdecoded into a plausible value or surfaced as a bare IndexError.
+
+
+def test_decode_rejects_length_past_end_of_buffer():
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import _write_varint, decode
+
+    for schema in ("string", "bytes"):
+        with pytest.raises(ValueError, match="past the end"):
+            decode(_write_varint(10) + b"abc", schema)  # 10-byte length, 3 bytes left
+    with pytest.raises(ValueError, match="past the end"):
+        decode(b"ab", {"type": "fixed", "name": "f4", "size": 4})
+
+
+def test_decode_rejects_union_branch_or_enum_index_outside_schema():
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import _write_varint, decode
+
+    for branch in (-1, 2):  # ["null", "int"] has branches 0 and 1
+        with pytest.raises(ValueError, match="union branch index"):
+            decode(_write_varint(branch) + _write_varint(5), ["null", "int"])
+    enum = {"type": "enum", "name": "col", "symbols": ["red", "green"]}
+    for idx in (-1, 2):
+        with pytest.raises(ValueError, match="enum index"):
+            decode(_write_varint(idx), enum)
+
+
+def test_wire_decode_rejects_message_shorter_than_header():
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import wire_decode
+
+    for short in (b"", b"\x00", b"\x00\x00", b"\x00\x00\x00\x00"):
+        with pytest.raises(ValueError, match="5-byte header"):
+            wire_decode(short, {0: "string"})
+
+
+def test_wire_decode_rejects_body_cut_mid_record():
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import wire_decode, wire_encode
+
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "name", "type": "string"},
+        {"name": "ok", "type": "boolean"},
+        {"name": "score", "type": "double"},
+        {"name": "age", "type": "long"}]}
+    msg = wire_encode(3, {"name": "Gilberto", "ok": True, "score": 0.5, "age": 1 << 20}, schema)
+    assert wire_decode(msg, {3: schema}) == (3, {"name": "Gilberto", "ok": True, "score": 0.5, "age": 1 << 20})
+    for cut in range(5, len(msg)):  # every cut inside the body
+        with pytest.raises(ValueError, match="truncated"):
+            wire_decode(msg[:cut], {3: schema})

@@ -683,3 +683,101 @@ def test_stateful_restart_mid_stream_matches_uninterrupted_run(spark, tmp_path):
     uninterrupted = _drain_window_updates(chain(), str(tmp_path / "ck-once"))
     assert restarted == uninterrupted
     assert sum(n for n, _s in uninterrupted.values()) == 80
+
+
+def test_small_stream_files_pack_into_default_parallelism_splits(spark, tmp_path):
+    """A backlog of many small Confluent-wire files is planned by Spark's own
+    split sizing: files pack into at most one decode task per core instead
+    of one task per file, and every record still decodes to its truth."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import decode_confluent_avro, wire_encode
+
+    v1 = {"type": "record", "name": "m", "fields": [
+        {"name": "name", "type": "string"}, {"name": "age", "type": "long"}]}
+    v2 = {"type": "record", "name": "m", "fields": v1["fields"] + [
+        {"name": "email", "type": ["null", "string"]}]}
+    n_files, per_file = 16, 25
+    assert n_files > spark.sparkContext.defaultParallelism
+    src = tmp_path / "src"
+    src.mkdir()
+    truth = {}
+    for f in range(n_files):
+        offsets, values = [], []
+        for o in range(f * per_file, (f + 1) * per_file):
+            if o % 4 == 0:
+                rec, sid = {"name": f"u{o}", "age": o, "email": f"u{o}@example.org"}, 2
+            else:
+                rec, sid = {"name": f"u{o}", "age": o}, 1
+            offsets.append(o)
+            values.append(wire_encode(sid, rec, v2 if sid == 2 else v1))
+            truth[o] = (sid, rec["name"], rec["age"], rec.get("email"))
+        pq.write_table(pa.table({"offset": offsets, "value": values}), str(src / f"{f:02d}.parquet"))
+
+    stream = spark.readStream.schema("offset long, value binary").parquet(str(src))
+    reader = StructType([
+        StructField("name", StringType()), StructField("age", LongType()), StructField("email", StringType())
+    ])
+    decoded = decode_confluent_avro(stream, reader, {1: v1, 2: v2})
+    partitions, got = [], {}
+
+    def sink(df, epoch_id):
+        partitions.append(df.rdd.getNumPartitions())
+        got.update({r.offset: (r.schema_id, r.name, r.age, r.email) for r in df.collect()})
+
+    q = (
+        decoded.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert len(partitions) == 1 and partitions[0] <= spark.sparkContext.defaultParallelism
+    assert got == truth
+
+
+def test_runtime_confs_differ_from_spark_defaults(spark):
+    """Every conf tune() sets is runtime-settable and changes something: a
+    value equal to Spark's own default is a restatement to delete."""
+    from sparkstreaming_quickstart_spark.session import RUNTIME_CONFS
+
+    sql_conf = getattr(getattr(spark._jvm.org.apache.spark.sql.internal, "SQLConf$"), "MODULE$")
+    for key, value in RUNTIME_CONFS.items():
+        assert spark.conf.isModifiable(key), key
+        entry = sql_conf.getConfigEntry(key)
+        while entry.getClass().getSimpleName() == "FallbackConfigEntry":
+            entry = entry.fallback()  # e.g. arrow.pyspark.enabled -> arrow.enabled
+        convert = entry.valueConverter()
+        assert convert.apply(value) != convert.apply(entry.defaultValueString()), key
+
+
+def test_run_to_memory_holds_shuffle_partitions_only_across_start(spark, sf_dir, monkeypatch):
+    """run_to_memory caps the query's state partitions at the core count, but
+    the session-wide setting is the caller's again while the query drains:
+    the query runs on a clone of the session conf taken in start()."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    seen = {}
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, timeout=None):
+        seen["partitions"], seen["query"] = spark.conf.get(key), self
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cores + 5))
+    try:
+        counts = events_stream(spark, sf_dir).groupBy("event_type").count()
+        table = run_to_memory(counts, output_mode="complete")
+        assert spark.conf.get(key) == str(cores + 5)
+    finally:
+        spark.conf.set(key, prev)
+    assert seen["partitions"] == str(cores + 5)
+    ops = [op for p in seen["query"].recentProgress for op in p["stateOperators"]]
+    assert ops and all(op["numShufflePartitions"] == cores for op in ops)
+    assert spark.table(table).count() == load_table(spark, sf_dir, "events").select("event_type").distinct().count()
