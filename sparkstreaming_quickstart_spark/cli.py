@@ -98,12 +98,12 @@ def main(argv: list[str] | None = None) -> int:
             starting_offsets="earliest" if args.earliest else "latest",
             confluent_wire_format=args.registry is not None,
         )
-    # Reference sink semantics (A3): print key/value per record.
-    writer = (
-        stream.writeStream.format("console")
-        .option("truncate", "false")
-        .option("checkpointLocation", args.checkpoint_folder or "/tmp/ssq-cli-checkpoint")
-    )
+    # Reference sink semantics (A3): print key/value per record.  Checkpoints
+    # are opt-in as in the reference: without --checkpoint-folder the console
+    # sink runs on Spark's temporary checkpoint and starts afresh every run.
+    writer = stream.writeStream.format("console").option("truncate", "false")
+    if args.checkpoint_folder:
+        writer = writer.option("checkpointLocation", args.checkpoint_folder)
     if args.drain:
         writer = writer.trigger(availableNow=True)
     else:

@@ -565,10 +565,8 @@ def q163_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     "any micro-batch replay, the q74 lesson).",
 )
 def q164_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    dd = stream.select("user_id", "event_type", "ts").dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
+    stream = events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
+    dd = streaming_dedup(stream, ["user_id", "event_type"], watermark="2 hours")
     table = run_to_memory(dd, output_mode="append")
     return (
         spark.table(table)

@@ -277,10 +277,10 @@ def q372_stream_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
     from ..streaming.pipeline import run_to_memory
-    from ..streaming.source import documents_stream
+    from ..streaming.source import table_stream
 
     out_schema, state_schema = _smh_shard_schemas()
-    stream = documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = table_stream(spark, sf_dir, "documents").select("doc_id", "text")
     docs = hashed_shingle_docs(stream, "text", "doc_id", _SMH_N)
     # spread=False: the repartition warm-up probes .rdd, which streaming
     # DataFrames forbid; the file-replay source already splits per file.

@@ -879,38 +879,6 @@ def q391_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _embeddings_stream(spark: SparkSession, sf_dir: str, max_files: int = 1):
-    """Replay embeddings.parquet as a file-source stream -- the vector-ingest
-    sibling of documents_stream: at 100 TB this is the embedding-service
-    output topic; the file replay is the same unbounded-DataFrame contract
-    without a broker."""
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ..session import tune
-    from ..streaming.source import _stage_table_dir
-
-    tune(spark)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("label", IntegerType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(_stage_table_dir(sf_dir, "embeddings"))
-    )
-
-
 @register(
     "q392_stream_ivf_cell_monitor",
     sql=_q390_oracle(),
@@ -937,6 +905,7 @@ def q392_stream_ivf_cell_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         nlist_for,
     )
     from ..streaming.pipeline import run_to_memory
+    from ..streaming.source import table_stream
 
     # the monitor's quantizer is SIZED BY THE INDEXED CORPUS (the batch
     # table the index was built from), not by the stream -- production
@@ -945,7 +914,7 @@ def q392_stream_ivf_cell_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream (mapInPandas is streaming-legal)
     nlist = nlist_for(load_table(spark, sf_dir, "embeddings").count())
     W = adaptive_centroids(_MK_DIM, nlist)
-    stream = _embeddings_stream(spark, sf_dir).select(
+    stream = table_stream(spark, sf_dir, "embeddings", max_files_per_trigger=1).select(
         F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     cells = assign_cells_arrow(stream, "v", W).select("cell")

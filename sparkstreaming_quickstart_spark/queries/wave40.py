@@ -433,9 +433,9 @@ def q395_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q396_stream_dictionary_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text_scan import dictionary_scan
     from ..streaming.pipeline import run_to_memory
-    from ..streaming.source import documents_stream
+    from ..streaming.source import table_stream
 
-    stream = documents_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "documents")
     scanned = dictionary_scan(stream, "text", [t for t, _ in _TAG_DICT])
     agg = scanned.groupBy("term_idx").agg(
         F.count("*").alias("n_docs"),

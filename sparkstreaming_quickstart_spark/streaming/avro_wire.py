@@ -16,12 +16,13 @@ jar-free equivalent:
     topics; fields are then projected onto the caller's reader schema by
     name (missing -> null, extra -> dropped) -- Avro schema resolution's
     name-matching core;
-  * `decode_confluent_avro`, an Arrow-batched mapInPandas operator that
-    applies the above to any batch or streaming DataFrame with a binary
-    `value` column.  Python-side decode is the honest fallback: it is the
-    slow path relative to the JVM connector, but Arrow batching keeps it
-    off the per-row interpreter path, and the operator composes with every
-    downstream DataFrame transformation unchanged.
+  * `decode_confluent_avro`, a mapInPandas operator that applies the above
+    to any batch or streaming DataFrame with a binary `value` column, one
+    record at a time in the Python worker.  Python-side decode is the
+    honest fallback: it is the slow path relative to the JVM connector,
+    and the operator composes with every downstream DataFrame
+    transformation unchanged.  The Kafka route composes it onto the source:
+    `decode_confluent_avro(kafka_stream(...), reader, fetch_schema_map(...))`.
 
 When the spark-avro jar IS present and the topic has a single schema,
 prefer `kafka_stream(avro_schema_json=...)` (JVM decode); this module is
@@ -229,21 +230,20 @@ def decode_confluent_avro(
     df: DataFrame,
     reader_schema: StructType,
     schema_map: dict[int, Any],
-    value_col: str = "value",
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Decode a Confluent-wire Avro `value` column against a schema-id map.
 
     Works on batch AND streaming DataFrames (mapInPandas is supported in
-    both).  Output columns: `keep_cols` (default: all non-value input
-    columns) + `schema_id` int + one column per `reader_schema` field,
-    projected by name from the per-record writer schema (absent fields ->
-    null: the name-matching core of Avro schema resolution, enough for
-    additive evolution; full alias/promotion rules are out of scope).
+    both).  Output columns: every input column but `value` + `schema_id`
+    int + one column per `reader_schema` field, projected by name from the
+    per-record writer schema (absent fields -> null: the name-matching core
+    of Avro schema resolution, enough for additive evolution; full
+    alias/promotion rules are out of scope).  Each record is decoded by a
+    Python loop over the batch's values.
     """
     import pandas as pd
 
-    keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != value_col]
+    keep = [c for c in df.columns if c != "value"]
     parsed = {k: _norm(v) for k, v in schema_map.items()}
     field_names = [f.name for f in reader_schema.fields]
     out_schema = StructType(
@@ -255,7 +255,7 @@ def decode_confluent_avro(
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, cols = [], {n: [] for n in field_names}
-            for raw in pdf[value_col]:
+            for raw in pdf["value"]:
                 sid, rec = wire_decode(bytes(raw), parsed)
                 ids.append(sid)
                 for n in field_names:

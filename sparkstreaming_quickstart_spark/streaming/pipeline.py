@@ -2,10 +2,13 @@
 (Processor.java:149-163) re-expressed as Structured Streaming queries, plus
 the windowed/stateful operators the reference lacks.
 
-Checkpointing is per-query via `checkpointLocation` (offsets WAL + state
-store), which fixes the reference's recovery bug by construction -- a restored
-query always has its sink attached (vs Processor.java:48-54, where the
-checkpoint factory registers no output operation).
+Checkpointing is per query.  A caller that wants restarts passes a
+`checkpoint` (offsets WAL + state store), which fixes the reference's
+recovery bug by construction -- a restored query always has its sink
+attached (vs Processor.java:48-54, where the checkpoint factory registers no
+output operation).  Without one, Spark gives the query a `temporary-*`
+checkpoint of its own (memory, console and foreach sinks), deletes it when
+the query ends without error and keeps it when the query fails.
 
 Watermarks bound state size, and `availableNow` gives drain-and-stop
 backfill runs with the same code path as continuous processing.  The
@@ -15,46 +18,27 @@ event-time operator (Spark 4 refuses to redefine it).
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.money import dec
 
 
-def _checkpoint() -> str:
-    return tempfile.mkdtemp(prefix="ssq-checkpoint-")
-
-
-def run_console_pipeline(stream: DataFrame, trigger_seconds: float = 1.0) -> StreamingQuery:
-    """Reference-parity sink: per-record print (A3, Processor.java:141-147).
-
-    Unlike the reference, output lands on the driver console, not in executor
-    stdout (the classic DStream foreach gotcha noted in SURVEY.md 2.A-A3).
-    """
-    return (
-        stream.writeStream.format("console")
-        .option("truncate", "false")
-        .option("checkpointLocation", _checkpoint())
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def run_foreach_batch(
     stream: DataFrame,
     fn: Callable[[DataFrame, int], None],
     checkpoint: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Programmable sink (generalizes A3): fn(batch_df, epoch_id) per micro-batch."""
-    writer = stream.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint or _checkpoint())
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(processingTime="1 seconds")
-    return writer.start()
+    """Programmable sink (generalizes A3): fn(batch_df, epoch_id) per
+    micro-batch, drained with availableNow."""
+    writer = stream.writeStream.foreachBatch(fn)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.trigger(availableNow=True).start()
 
 
 def run_foreach_rows(
@@ -73,17 +57,16 @@ def run_foreach_rows(
     the scale sink.  This exists for protocol parity and side-effecting
     integrations that genuinely need per-row delivery semantics.
     """
-    return (
-        stream.writeStream.foreach(writer)
-        .option("checkpointLocation", checkpoint or _checkpoint())
-        .trigger(availableNow=True)
-        .start()
-    )
+    out = stream.writeStream.foreach(writer)
+    if checkpoint:
+        out = out.option("checkpointLocation", checkpoint)
+    return out.trigger(availableNow=True).start()
 
 
 def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str = "append") -> str:
     """Drain a stream into an in-memory table with availableNow; returns the
-    table name.  This is the test/driver harness for streaming queries.
+    table name.  This is the test/driver harness for streaming queries, on
+    Spark's temporary checkpoint.
 
     State-partition bound: a streaming query materializes one state store
     instance per shuffle partition, fixed at first checkpoint.  Under an
@@ -111,7 +94,6 @@ def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str =
             stream.writeStream.format("memory")
             .queryName(table)
             .outputMode(output_mode)
-            .option("checkpointLocation", _checkpoint())
             .trigger(availableNow=True)
             .start()
         )

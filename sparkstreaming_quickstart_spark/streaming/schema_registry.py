@@ -14,7 +14,7 @@ Design notes:
   `urllib.request` (stdlib -- no new dependency); tests inject a fake.  This
   is the seam the reference hides inside CachedSchemaRegistryClient.
 - Resolution happens ONCE at query build on the driver (SURVEY.md 1.2): the
-  resolved map is a plain dict broadcast into the Arrow decode kernel, so
+  resolved map is a plain dict shipped in the decode kernel's closure, so
   executors never talk to the registry -- at 1000 executors a per-task
   registry fetch would be a thundering herd; one driver-side fetch is the
   scale-correct shape (and matches the reference's client-side cache
@@ -64,8 +64,7 @@ def fetch_schema_map(
 ) -> dict[int, str]:
     """Resolve ids -> Avro schema JSON, deduplicated, driver-side.
 
-    The returned dict feeds `decode_confluent_avro` / `kafka_stream`'s
-    `schema_id_map` parameter unchanged.
+    The returned dict is `decode_confluent_avro`'s `schema_map` unchanged.
     """
     return {
         sid: fetch_schema_by_id(registry_url, sid, http_get)

@@ -1,14 +1,20 @@
 """Streaming sources.
 
-Production path mirrors the reference's Kafka ingest (A1/A2,
-Processor.java:118-139): `readStream.format("kafka")` + Avro decode, including
-the Confluent wire-format header strip (magic byte + 4-byte schema id) that
-`from_avro` does not understand.  Offsets/group management move into the
-checkpoint WAL, superseding the reference's `enable.auto.commit=false` +
-never-implemented manual commit (Processor.java:132-135).
+Production path mirrors the reference's Kafka ingest (A1,
+Processor.java:118-139): `kafka_stream` reads `readStream.format("kafka")`
+and, with a pinned reader schema, decodes the value through spark-avro's
+`from_avro`, after stripping the Confluent wire-format header (magic byte +
+4-byte schema id) that `from_avro` does not understand.  Per-record
+writer-schema decode is its own operator, composed by the caller:
+`decode_confluent_avro(kafka_stream(...), reader, fetch_schema_map(...))`
+(streaming/avro_wire.py, streaming/schema_registry.py).  Offsets/group
+management move into the checkpoint WAL, superseding the reference's
+`enable.auto.commit=false` + never-implemented manual commit
+(Processor.java:132-135).
 
-Test/driver path replays the `events` parquet table through the file stream
-source -- same unbounded-DataFrame surface, no broker needed.
+Test/driver path: `table_stream` replays a staged `<table>.parquet` through
+the file stream source -- same unbounded-DataFrame surface, no broker
+needed -- with the schema Spark itself reads from the file.
 """
 
 from __future__ import annotations
@@ -20,49 +26,9 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DataType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import LongType, TimestampNTZType
 
 from ..session import tune
-
-
-def _events_ts_type(sf_dir: str) -> DataType:
-    """Pick the stream-schema type for events.ts from the parquet footer.
-
-    The fixture generator has shipped both TIMESTAMP(NANOS) (which Spark's
-    reader surfaces as long under `nanosAsLong`) and TIMESTAMP(MICROS)
-    (naive -> TIMESTAMP_NTZ).  Deriving the type from the file keeps the
-    stream source in lockstep with whatever the batch reader sees instead of
-    baking in one generator's choice.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts").type
-    if pa.types.is_timestamp(t) and t.unit != "ns":
-        return TimestampType() if t.tz else TimestampNTZType()
-    return LongType()  # nanos read as long; converted to micros below
-
-
-def events_schema(sf_dir: str) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", _events_ts_type(sf_dir)),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
 
 
 def _stage_table_dir(sf_dir: str, table: str) -> str:
@@ -89,47 +55,29 @@ def _stage_table_dir(sf_dir: str, table: str) -> str:
     return staged
 
 
-def _stage_events_dir(sf_dir: str) -> str:
-    return _stage_table_dir(sf_dir, "events")
-
-
-def documents_schema() -> StructType:
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-
-
-def documents_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+def table_stream(
+    spark: SparkSession, sf_dir: str, table: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Replay documents.parquet as a file-source stream -- the corpus-ingest
-    sibling of events_stream for the streaming curation operators (q372):
-    at 100 TB this surface is the Kafka/object-store document firehose; the
-    file replay is the same unbounded-DataFrame contract without a broker."""
+    """Replay `<sf_dir>/<table>.parquet` as a file-source stream.
+
+    The stream schema is Spark's own read of the staged file, so it matches
+    what the batch reader sees under the same session confs."""
     tune(spark)
-    reader = spark.readStream.schema(documents_schema())
+    staged = _stage_table_dir(sf_dir, table)
+    reader = spark.readStream.schema(spark.read.parquet(staged).schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(_stage_table_dir(sf_dir, "documents"))
+    return reader.parquet(staged)
 
 
-def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events.parquet as a file-source stream (ts as a timestamp)."""
-    tune(spark)
-    schema = events_schema(sf_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(_stage_events_dir(sf_dir))
-    if isinstance(schema["ts"].dataType, LongType):
+    df = table_stream(spark, sf_dir, "events")
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        # TIMESTAMP(NANOS) reads as long under tune()'s nanosAsLong.
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
+    elif isinstance(ts_type, TimestampNTZType):
         # Watermarks require TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
         # NTZ).  tune() pins the session timezone to UTC, so this cast is a
         # value-preserving reinterpretation, not a shift.
@@ -175,45 +123,19 @@ def kafka_stream(
     avro_schema_json: str | None = None,
     starting_offsets: str = "earliest",
     confluent_wire_format: bool = True,
-    schema_id_map: dict[int, str] | None = None,
-    reader_schema=None,
-    registry_url: str | None = None,
-    registry_schema_ids: list[int] | None = None,
-    registry_http_get=None,
 ) -> DataFrame:
-    """Kafka source with (Confluent-)Avro value decode.
+    """Kafka source, with an optional pinned-schema Avro value decode.
 
     Reference parity (Processor.java:124-138): subscribe to topics, string
     key, Avro GenericRecord value, earliest/latest start.  The Kafka source
     itself requires the spark-sql-kafka package on the classpath; raises a
     clear error otherwise (it does not ship in this container).
 
-    Two decode routes:
-      * `avro_schema_json`: single pinned reader schema via the spark-avro
-        connector's `from_avro` (JVM decode; jar required).
-      * `schema_id_map` (+ `reader_schema` StructType): per-record writer
-        schema resolved from the Confluent wire header id -- the reference's
-        registry behavior (Processor.java:128-130), with the id->schema map
-        resolved once at query build (SURVEY.md 1.2).  Pure-Python
-        Arrow-batched decode (streaming/avro_wire.py); no extra jar.
-
-    Instead of a pre-dumped `schema_id_map`, pass `registry_url` (+
-    `registry_schema_ids`, and `reader_schema` as above) to resolve the
-    map from a live Confluent Schema Registry at query build --
-    driver-side, stdlib HTTP, transport injectable via
-    `registry_http_get` (streaming/schema_registry.py; the reference's
-    schema.registry.url behavior, Processor.java:128-130).
+    With `avro_schema_json`, the value decodes to a `record` column through
+    the spark-avro connector's `from_avro` (JVM decode; jar required), after
+    stripping the Confluent header when `confluent_wire_format`.  Without it
+    the binary `value` passes through, for `decode_confluent_avro`.
     """
-    if schema_id_map is None and registry_url is not None:
-        if not registry_schema_ids:
-            raise ValueError("registry_url requires registry_schema_ids")
-        from .schema_registry import _stdlib_http_get, fetch_schema_map
-
-        schema_id_map = fetch_schema_map(
-            registry_url,
-            registry_schema_ids,
-            registry_http_get or _stdlib_http_get,
-        )
     df = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -229,12 +151,6 @@ def kafka_stream(
         "offset",
         "timestamp",
     )
-    if schema_id_map is not None:
-        if reader_schema is None:
-            raise ValueError("schema_id_map requires reader_schema (StructType)")
-        from .avro_wire import decode_confluent_avro
-
-        return decode_confluent_avro(out, reader_schema, schema_id_map)
     if avro_schema_json is not None:
         _require_avro(spark)
         from pyspark.sql.avro.functions import from_avro
@@ -244,8 +160,8 @@ def kafka_stream(
     return out
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 100, synthetic_events: bool = True) -> DataFrame:
-    """Built-in rate source, optionally shaped like the events table.
+def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
+    """Built-in rate source shaped like the events table.
 
     The rate source is the brokerless stand-in for load/soak testing the
     streaming pipeline (SURVEY.md section 2.B "File/rate stream source"):
@@ -259,8 +175,6 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 100, synthetic_event
         .option("rowsPerSecond", rows_per_second)
         .load()
     )
-    if not synthetic_events:
-        return df
     return df.select(
         F.col("value").alias("event_id"),
         F.col("timestamp").alias("ts"),

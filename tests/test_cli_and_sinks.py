@@ -42,6 +42,22 @@ def test_cli_replay_drain(sf_dir):
     assert "event_type" in out.stdout  # console sink printed records
 
 
+def test_cli_replay_drain_without_checkpoint_folder_starts_afresh(sf_dir):
+    """Without --checkpoint-folder the console sink keeps no offsets between
+    runs: a second drain prints the records again instead of resuming."""
+    for _ in range(2):
+        out = subprocess.run(
+            [sys.executable, "-m", "sparkstreaming_quickstart_spark", "--replay-dir", sf_dir, "--drain"],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert "event_type" in out.stdout
+
+
 def test_cli_query_mode_runs_registered_query(sf_dir):
     out = subprocess.run(
         [

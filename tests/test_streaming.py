@@ -22,21 +22,24 @@ from sparkstreaming_quickstart_spark.streaming.pipeline import (
 from sparkstreaming_quickstart_spark.streaming.source import events_stream
 
 
+def _batch_tumbling_rows(spark, sf_dir):
+    """tumbling_counts' defaults computed over the batch table, sorted."""
+    from sparkstreaming_quickstart_spark.functions.money import dec
+
+    batch_result = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"), F.sum(dec("value")).cast("double").alias("sum_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
+    )
+    return sorted(map(tuple, batch_result.collect()))
+
+
 def test_stream_equals_batch_tumbling(spark, sf_dir):
     stream_result = spark.table(
         run_to_memory(tumbling_counts(events_stream(spark, sf_dir)), output_mode="complete")
     )
-    batch = load_table(spark, sf_dir, "events")
-    from sparkstreaming_quickstart_spark.functions.money import dec
-
-    batch_result = (
-        batch.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum(dec("value")).cast("double").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-    a = sorted(map(tuple, stream_result.collect()))
-    b = sorted(map(tuple, batch_result.collect()))
-    assert a == b
+    assert sorted(map(tuple, stream_result.collect())) == _batch_tumbling_rows(spark, sf_dir)
 
 
 def test_foreach_batch_sink_collects_all_rows(spark, sf_dir):
@@ -781,3 +784,52 @@ def test_run_to_memory_holds_shuffle_partitions_only_across_start(spark, sf_dir,
     ops = [op for p in seen["query"].recentProgress for op in p["stateOperators"]]
     assert ops and all(op["numShufflePartitions"] == cores for op in ops)
     assert spark.table(table).count() == load_table(spark, sf_dir, "events").select("event_type").distinct().count()
+
+
+def test_drains_without_checkpoint_leave_no_checkpoint_dir(spark, sf_dir):
+    """run_to_memory and run_foreach_batch set no checkpointLocation of
+    their own: Spark's temporary checkpoint is deleted when the query ends
+    without error, so a drain leaves nothing behind under the temp dir."""
+    import glob
+    import os
+
+    def checkpoint_dirs():
+        tmp = tempfile.gettempdir()
+        return {p for pat in ("ssq-checkpoint-*", "temporary-*") for p in glob.glob(os.path.join(tmp, pat))}
+
+    before = checkpoint_dirs()
+    table = run_to_memory(tumbling_counts(events_stream(spark, sf_dir)), output_mode="complete")
+    seen: list[int] = []
+    run_foreach_batch(events_stream(spark, sf_dir), lambda df, epoch_id: seen.append(df.count())).awaitTermination()
+    assert checkpoint_dirs() - before == set()
+    assert sorted(map(tuple, spark.table(table).collect())) == _batch_tumbling_rows(spark, sf_dir)
+    assert sum(seen) == load_table(spark, sf_dir, "events").count()
+
+
+def test_events_stream_reads_nanosecond_ts_as_timestamp(spark, tmp_path):
+    """events.parquet written with TIMESTAMP(NANOS) reads as long under the
+    session's nanosAsLong; events_stream turns it into a TimestampType ts
+    carrying the written instants."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    micros = [1_700_000_000_000_000, 1_700_000_123_456_789, 1_700_003_600_000_001]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array([m * 1000 for m in micros], pa.timestamp("ns")),
+                "user_id": pa.array([7, 8, 9], pa.int64()),
+                "event_type": ["click", "view", "error"],
+                "value": [1.5, 2.5, 3.5],
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    table = run_to_memory(events_stream(spark, str(tmp_path)))
+    out = spark.table(table)
+    assert out.schema["ts"].dataType == TimestampType()
+    got = sorted(map(tuple, out.select("event_id", F.unix_micros("ts")).collect()))
+    assert got == [(1, micros[0]), (2, micros[1]), (3, micros[2])]
