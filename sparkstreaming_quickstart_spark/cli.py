@@ -37,7 +37,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--batch-period", type=int, default=1000, help="micro-batch trigger in ms")
     p.add_argument("--source-topic", action="append", default=[], help="repeatable")
     p.add_argument("--avro-schema", default=None, help="reader Avro schema JSON (value decode)")
-    p.add_argument("--replay-dir", default=None, help="run off the events.parquet replay instead of Kafka")
+    p.add_argument(
+        "--replay-dir",
+        default=None,
+        help="run off <dir>/events.parquet instead of Kafka; the dir must hold no "
+        "hive-style k=v/ subdir",
+    )
     p.add_argument("--drain", action="store_true", help="availableNow: process everything then stop")
     p.add_argument(
         "--query",

@@ -179,6 +179,42 @@ def q74_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _errors_join_clicks(mk_events, how: str) -> DataFrame:
+    """Errors joined with their trailing-1h clicks per user (`how`: inner,
+    left_outer, full_outer), both sides watermarked 2h: q73, q146, q179 and
+    q397.  `mk_events()` returns a fresh events stream per call, so each side
+    of the self-join gets its own source node.  The click's `value` comes
+    along as `c_value` (q397's rollup; the others project it away)."""
+    errors = (
+        mk_events()
+        .filter(F.col("event_type") == "error")
+        .select(
+            F.col("event_id").alias("error_id"),
+            F.col("user_id").alias("e_user"),
+            F.col("ts").alias("e_ts"),
+        )
+        .withWatermark("e_ts", "2 hours")
+    )
+    clicks = (
+        mk_events()
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+            F.col("value").alias("c_value"),
+        )
+        .withWatermark("c_ts", "2 hours")
+    )
+    return errors.join(
+        clicks,
+        (F.col("e_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("c_ts") <= F.col("e_ts")),
+        how,
+    )
+
+
 @register(
     "q73_stream_stream_join",
     sql="""
@@ -193,25 +229,8 @@ def q74_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermarked both sides).",
 )
 def q73_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    errors = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("event_id").alias("error_id"), F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "2 hours")
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("e_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("e_ts")),
-    ).select("error_id", "click_id")
-    table = run_to_memory(joined, output_mode="append")
+    joined = _errors_join_clicks(lambda: events_stream(spark, sf_dir), "inner")
+    table = run_to_memory(joined.select("error_id", "click_id"), output_mode="append")
     return spark.table(table).orderBy("error_id", "click_id")
 
 
@@ -319,14 +338,9 @@ def q76_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@register(
-    "q84_stream_session_window",
-    sql=SESSION_WINDOW_ORACLE,
-    doc="STREAMING session_window (30-min gap) with watermark, drained via "
-    "availableNow -- the stateful merging-session operator; shares q35's "
-    "batch gaps-and-islands oracle (prefix consistency).",
-)
-def q84_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _user_sessions(spark: SparkSession, sf_dir: str, output_mode: str) -> DataFrame:
+    """Per-user 30-min-gap session windows over events with a 2h watermark,
+    drained in `output_mode` (q84 complete, q394 append)."""
     stream = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -338,8 +352,19 @@ def q84_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    table = run_to_memory(agg, output_mode="complete")
+    table = run_to_memory(agg, output_mode=output_mode)
     return spark.table(table).orderBy("user_id", "session_start")
+
+
+@register(
+    "q84_stream_session_window",
+    sql=SESSION_WINDOW_ORACLE,
+    doc="STREAMING session_window (30-min gap) with watermark, drained via "
+    "availableNow -- the stateful merging-session operator; shares q35's "
+    "batch gaps-and-islands oracle (prefix consistency).",
+)
+def q84_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _user_sessions(spark, sf_dir, "complete")
 
 
 @register(
@@ -374,26 +399,8 @@ def q84_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "State size is bounded by the watermark on both sides.",
 )
 def q146_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    errors = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("event_id").alias("error_id"), F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "2 hours")
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("e_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("e_ts")),
-        "left_outer",
-    ).select("error_id", "click_id")
-    table = run_to_memory(joined, output_mode="append")
+    joined = _errors_join_clicks(lambda: events_stream(spark, sf_dir), "left_outer")
+    table = run_to_memory(joined.select("error_id", "click_id"), output_mode="append")
     return spark.table(table).orderBy("error_id", "click_id")
 
 
@@ -522,29 +529,31 @@ def q159_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q163_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    ckpt = tempfile.mkdtemp(prefix="ssq-statestore-")
     stream = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     agg = stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n_events")
     )
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.read.format("statestore").load(ckpt)
-    # The state schema uses physical names, not query aliases (probed): the
-    # key's window field is `window`, the value's single aggregation buffer
-    # is `count` -- resolve the buffer by position to stay robust.
-    buf = state.schema["value"].dataType.names[0]
-    return state.select(
-        F.col("key.window.start").alias("window_start"),
-        F.col("key.event_type").alias("event_type"),
-        F.col(f"value.{buf}").alias("n_events"),
-    ).orderBy("window_start", "event_type")
+    with tempfile.TemporaryDirectory(prefix="ssq-statestore-") as ckpt:
+        (
+            agg.writeStream.format("noop")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        state = spark.read.format("statestore").load(ckpt)
+        # The state schema uses physical names, not query aliases (probed):
+        # the key's window field is `window`, the value's single aggregation
+        # buffer is `count` -- resolve the buffer by position to stay robust.
+        buf = state.schema["value"].dataType.names[0]
+        # Pinned (eager) before the checkpoint dir goes.
+        rows = state.select(
+            F.col("key.window.start").alias("window_start"),
+            F.col("key.event_type").alias("event_type"),
+            F.col(f"value.{buf}").alias("n_events"),
+        ).localCheckpoint()
+    return rows.orderBy("window_start", "event_type")
 
 
 @register(
@@ -620,34 +629,8 @@ def q164_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     "sides is watermark-evicted, so it stays bounded at any volume.",
 )
 def q179_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    errors = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "2 hours")
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("e_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("e_ts")),
-        "full_outer",
-    ).select("error_id", "click_id")
-    table = run_to_memory(joined, output_mode="append")
+    joined = _errors_join_clicks(lambda: events_stream(spark, sf_dir), "full_outer")
+    table = run_to_memory(joined.select("error_id", "click_id"), output_mode="append")
     return spark.table(table).orderBy(
         F.col("error_id").asc_nulls_last(), F.col("click_id").asc_nulls_last()
     )

@@ -396,8 +396,8 @@ def q373_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write events once as event_type=<v>/ hive partitions into a
-    content-keyed temp dir (same invalidation discipline as the stream
-    staging: the key embeds the source file's mtime+size)."""
+    content-keyed temp dir: the key embeds the source file's mtime+size, so
+    regenerating the testdata in place invalidates the cached layout."""
     import hashlib as _h
     import tempfile
 

@@ -914,7 +914,7 @@ def q392_stream_ivf_cell_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream (mapInPandas is streaming-legal)
     nlist = nlist_for(load_table(spark, sf_dir, "embeddings").count())
     W = adaptive_centroids(_MK_DIM, nlist)
-    stream = table_stream(spark, sf_dir, "embeddings", max_files_per_trigger=1).select(
+    stream = table_stream(spark, sf_dir, "embeddings").select(
         F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     cells = assign_cells_arrow(stream, "v", W).select("cell")

@@ -168,22 +168,9 @@ def _q394_oracle(cmp: str) -> str:
     "grouping key.",
 )
 def q394_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import run_to_memory
-    from ..streaming.source import events_stream
+    from .streaming import _user_sessions
 
-    stream = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    agg = (
-        stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    table = run_to_memory(agg, output_mode="append")
-    return spark.table(table).orderBy("user_id", "session_start")
+    return _user_sessions(spark, sf_dir, "append")
 
 
 # ---------------------------------------------------------------------------

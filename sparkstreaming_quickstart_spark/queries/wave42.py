@@ -105,37 +105,13 @@ def q397_stream_join_window_rollup(spark: SparkSession, sf_dir: str) -> DataFram
 def _q397_agg(mk_events) -> DataFrame:
     """join -> window plan over an events-shaped STREAMING source
     (`mk_events()` returns a fresh stream per call -- two sides of a
-    stream-stream self-join each get their own source node, mirroring
-    q146/q179; factored out so the emission-rule and split-replay tests
+    stream-stream self-join each get their own source node, the q73/q146/
+    q179 join; factored out so the emission-rule and split-replay tests
     run the identical plan over synthetic/sliced streams)."""
     from ..functions.money import dec
+    from .streaming import _errors_join_clicks
 
-    errors = (
-        mk_events().filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "2 hours")
-    )
-    clicks = (
-        mk_events().filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("e_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("e_ts")),
-        "inner",
-    )
+    joined = _errors_join_clicks(mk_events, "inner")
     return (
         joined.groupBy(F.window("e_ts", "1 hour").alias("w"))
         .agg(

@@ -273,24 +273,22 @@ def q177_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.source import events_stream
 
-    root = tempfile.mkdtemp(prefix="ssq-upsert-")
-    state_dir = os.path.join(root, "state")
-    upsert = make_upsert(root)
-
     stream = events_stream(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.read.parquet(state_dir)
-    return state.select(
-        "user_id",
-        F.col("last.event_type").alias("last_event_type"),
-        F.col("n_events").cast("bigint").alias("n_events"),
-    ).orderBy("user_id")
+    with tempfile.TemporaryDirectory(prefix="ssq-upsert-") as root:
+        (
+            stream.writeStream.foreachBatch(make_upsert(root))
+            .option("checkpointLocation", os.path.join(root, "ck"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        # Pinned (eager) before the table dir goes.
+        state = spark.read.parquet(os.path.join(root, "state")).select(
+            "user_id",
+            F.col("last.event_type").alias("last_event_type"),
+            F.col("n_events").cast("bigint").alias("n_events"),
+        ).localCheckpoint()
+    return state.orderBy("user_id")
 
 
 _EUCLID_T = 1.2  # exact output threshold; candidate gate is 1.25x wider

@@ -8,9 +8,10 @@ Two situations:
 `tune()` is the one place package confs are applied, in both situations.  It
 runs again on every table load, so it holds only what the package needs
 everywhere, and only what Spark would not set by itself.  `get_spark` adds
-what must be fixed before the JVM starts (master, heap, UI) and the
-broadcast-join threshold of the sessions it builds: a starting value that a
-caller may change, which `tune()` would reset.  Split sizing is Spark's own:
+what must be fixed before the JVM starts (master, heap, UI) and two
+starting values of the sessions it builds, the broadcast-join threshold and
+the shuffle partition count: values a caller may change, which `tune()`
+must not reset.  Split sizing is Spark's own:
 a file scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))`
 per task, so small tables stay one split and a backlog of many small stream
 files packs into about one task per core.  AQE (partition coalescing,
@@ -78,7 +79,7 @@ def _ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
-def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
+def tune(spark: SparkSession) -> SparkSession:
     """Apply this package's runtime confs to any session, owned or not
     (idempotent)."""
     for k, v in RUNTIME_CONFS.items():
@@ -86,8 +87,6 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
             spark.conf.set(k, v)
         except Exception:
             pass  # conf not recognized / locked down -> keep going
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         if spark.sparkContext.master.startswith("local"):
             # Split sizing stays Spark's here too: its rule already keeps a
@@ -142,4 +141,5 @@ def get_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    return tune(spark, shuffle_partitions)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return tune(spark)

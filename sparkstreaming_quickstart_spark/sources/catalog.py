@@ -44,9 +44,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame with engine-canonical schema."""
     tune(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long -> truncate to micros (floor division;
-        # epoch-nanos are positive so this equals DuckDB's cast semantics).
+    return nanos_ts_to_micros(df) if name == "events" else df
+
+
+def nanos_ts_to_micros(df: DataFrame) -> DataFrame:
+    """A TIMESTAMP(NANOS) `ts` read as long (nanosAsLong) becomes a
+    timestamp truncated to micros (floor division; epoch-nanos are positive
+    so this equals DuckDB's cast semantics).  Any other `ts` passes."""
+    if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 

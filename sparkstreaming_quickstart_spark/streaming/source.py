@@ -12,72 +12,43 @@ management move into the checkpoint WAL, superseding the reference's
 `enable.auto.commit=false` + never-implemented manual commit
 (Processor.java:132-135).
 
-Test/driver path: `table_stream` replays a staged `<table>.parquet` through
-the file stream source -- same unbounded-DataFrame surface, no broker
-needed -- with the schema Spark itself reads from the file.
+Test/driver path: `table_stream` replays `<sf_dir>/<table>.parquet` in place
+through the file stream source -- same unbounded-DataFrame surface, no broker
+and no copy needed -- with the schema Spark itself reads from the file.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import TimestampNTZType
 
 from ..session import tune
+from ..sources.catalog import nanos_ts_to_micros
 
 
-def _stage_table_dir(sf_dir: str, table: str) -> str:
-    """File stream sources need a *directory*; stage the single
-    <table>.parquet into a per-sf temp dir (hard-link when possible, copy
-    otherwise).
-
-    The staging key includes the source file's (mtime, size), so regenerating
-    the testdata in place invalidates the staged copy instead of silently
-    replaying stale data for the life of the machine."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{table}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    staged = os.path.join(tempfile.gettempdir(), f"ssq-{table}-{key}")
-    target = os.path.join(staged, f"{table}.parquet")
-    if not os.path.exists(target):
-        os.makedirs(staged, exist_ok=True)
-        try:
-            os.link(src, target)
-        except OSError:
-            shutil.copyfile(src, target)
-    return staged
-
-
-def table_stream(
-    spark: SparkSession, sf_dir: str, table: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Replay `<sf_dir>/<table>.parquet` as a file-source stream.
 
-    The stream schema is Spark's own read of the staged file, so it matches
-    what the batch reader sees under the same session confs."""
+    The file source lists `sf_dir` in place and keeps only the table's file
+    (`pathGlobFilter`), so the replay needs no copy of it.  `sf_dir` must be
+    flat: a hive-style `k=v/` subdir there makes Spark's partition inference
+    fail (CONFLICTING_DIRECTORY_STRUCTURES), while a plain subdir is not
+    listed.  The stream schema is Spark's own read of the file, so it
+    matches what the batch reader sees under the same session confs."""
     tune(spark)
-    staged = _stage_table_dir(sf_dir, table)
-    reader = spark.readStream.schema(spark.read.parquet(staged).schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(staged)
+    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events.parquet as a file-source stream (ts as a timestamp)."""
-    df = table_stream(spark, sf_dir, "events")
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        # TIMESTAMP(NANOS) reads as long under tune()'s nanosAsLong.
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif isinstance(ts_type, TimestampNTZType):
+    df = nanos_ts_to_micros(table_stream(spark, sf_dir, "events"))
+    if isinstance(df.schema["ts"].dataType, TimestampNTZType):
         # Watermarks require TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
         # NTZ).  tune() pins the session timezone to UTC, so this cast is a
         # value-preserving reinterpretation, not a shift.

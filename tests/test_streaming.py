@@ -809,10 +809,23 @@ def test_drains_without_checkpoint_leave_no_checkpoint_dir(spark, sf_dir):
 def test_events_stream_reads_nanosecond_ts_as_timestamp(spark, tmp_path):
     """events.parquet written with TIMESTAMP(NANOS) reads as long under the
     session's nanosAsLong; events_stream turns it into a TimestampType ts
-    carrying the written instants."""
+    carrying the written instants.  The replay reads the table in place:
+    other files in the same dir are not replayed, and no copy of the table
+    is made under the temp dir."""
+    import glob
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.types import TimestampType
+
+    def staged_dirs():
+        # the old staging name, ssq-events-<hex key>; not q374's ssq-events-part-* cache
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ssq-events-[0-9a-f]*")))
+
+    before = staged_dirs()
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), str(tmp_path / "documents.parquet"))
+    (tmp_path / "README.md").write_text("not a table\n")
 
     micros = [1_700_000_000_000_000, 1_700_000_123_456_789, 1_700_003_600_000_001]
     pq.write_table(
@@ -831,5 +844,29 @@ def test_events_stream_reads_nanosecond_ts_as_timestamp(spark, tmp_path):
     table = run_to_memory(events_stream(spark, str(tmp_path)))
     out = spark.table(table)
     assert out.schema["ts"].dataType == TimestampType()
+    assert out.count() == 3
     got = sorted(map(tuple, out.select("event_id", F.unix_micros("ts")).collect()))
     assert got == [(1, micros[0]), (2, micros[1]), (3, micros[2])]
+    assert staged_dirs() - before == set()
+
+
+def test_state_store_and_upsert_queries_leave_no_temp_dir(spark, sf_dir):
+    """q163 drains into a checkpoint dir and q177 into a table dir of their
+    own; each dir is gone once the query returns, and the returned rows,
+    pinned before it went, still equal the oracle."""
+    import glob
+    import os
+
+    from sparkstreaming_quickstart_spark.oracle import compare
+    from sparkstreaming_quickstart_spark.queries import all_queries
+
+    def query_dirs():
+        tmp = tempfile.gettempdir()
+        return {p for pat in ("ssq-statestore-*", "ssq-upsert-*") for p in glob.glob(os.path.join(tmp, pat))}
+
+    queries = all_queries()
+    before = query_dirs()
+    for name in ("q163_state_store_reader", "q177_foreachbatch_upsert"):
+        res = compare(spark, sf_dir, queries[name].fn, queries[name].sql)
+        assert res["ok"] and res["spark_rows"] > 0, (name, res)
+    assert query_dirs() - before == set()
