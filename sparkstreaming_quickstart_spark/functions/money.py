@@ -21,32 +21,33 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 PRECISION = 18
+SCALE = 2
 
 
-def dec(col: Column | str, scale: int = 2) -> Column:
+def dec(col: Column | str) -> Column:
     """Cast a money-like double to exact decimal."""
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({PRECISION},{scale})")
+    return c.cast(f"decimal({PRECISION},{SCALE})")
 
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
+def dsum(col: Column | str) -> Column:
     """Order-insensitive exact sum, exposed as double."""
-    return F.sum(dec(col, scale)).cast("double")
+    return F.sum(dec(col)).cast("double")
 
 
-def davg(col: Column | str, scale: int = 2) -> Column:
+def davg(col: Column | str) -> Column:
     """Deterministic average: exact decimal sum, one double division."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(dec(c, scale)).cast("double") / F.count(c)
+    return F.sum(dec(c)).cast("double") / F.count(c)
 
 
-def sql_dec(expr: str, scale: int = 2) -> str:
-    return f"CAST({expr} AS DECIMAL({PRECISION},{scale}))"
+def sql_dec(expr: str) -> str:
+    return f"CAST({expr} AS DECIMAL({PRECISION},{SCALE}))"
 
 
-def sql_dsum(expr: str, scale: int = 2) -> str:
-    return f"CAST(SUM({sql_dec(expr, scale)}) AS DOUBLE)"
+def sql_dsum(expr: str) -> str:
+    return f"CAST(SUM({sql_dec(expr)}) AS DOUBLE)"
 
 
-def sql_davg(expr: str, scale: int = 2) -> str:
-    return f"(CAST(SUM({sql_dec(expr, scale)}) AS DOUBLE) / COUNT({expr}))"
+def sql_davg(expr: str) -> str:
+    return f"(CAST(SUM({sql_dec(expr)}) AS DOUBLE) / COUNT({expr}))"

@@ -37,6 +37,14 @@ from ..functions.text import tokens, word_shingles
 # overflow), keeping the multiply-mod family well-defined.
 _P = (1 << 31) - 1
 
+# The MinHash-LSH policy: 96 seeded hashes in 24 bands of 4 rows, and the
+# band-bucket size cap.  The batch (minhash_lsh_pairs, q52) and streaming
+# (q372) near-dup paths both read these, so they bucket identically.
+MINHASH_HASHES = 96
+MINHASH_BANDS = 24
+MINHASH_SEED = 42
+MINHASH_BUCKET_CAP = 256
+
 
 def _hash_family(num: int, seed: int = 42) -> list[tuple[int, int]]:
     rnd = random.Random(seed)
@@ -245,10 +253,7 @@ def minhash_lsh_pairs(
     id_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    num_hashes: int = 96,
-    bands: int = 24,
-    seed: int = 42,
-    bucket_cap: int = 256,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
     observation=None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + exact-Jaccard verification.
@@ -285,9 +290,6 @@ def minhash_lsh_pairs(
         text_col,
         id_col,
         n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        seed=seed,
         bucket_cap=bucket_cap,
         observation=observation,
     )
@@ -299,10 +301,7 @@ def minhash_lsh_candidates(
     text_col: str,
     id_col: str,
     n: int = 3,
-    num_hashes: int = 96,
-    bands: int = 24,
-    seed: int = 42,
-    bucket_cap: int = 256,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
     observation=None,
 ) -> DataFrame:
     """The candidate stage of minhash_lsh_pairs: (d1 < d2) pairs sharing at
@@ -315,8 +314,8 @@ def minhash_lsh_candidates(
     # minhash_signatures); band keys index the mh array of that single
     # MapInPandas node -- element access here is a cheap projection over
     # already-computed longs, not a re-evaluation of the signature math.
-    sigs = minhash_signatures(docs, num_hashes, seed)
-    banded = lsh_band_keys(sigs, num_hashes, bands)
+    sigs = minhash_signatures(docs, MINHASH_HASHES, MINHASH_SEED)
+    banded = lsh_band_keys(sigs, MINHASH_HASHES, MINHASH_BANDS)
     # Bucket members -> all (d1 < d2) pairs, generated inside each bucket.
     # One shuffle over the banded rows; same k^2-per-bucket work the self-join
     # formulation does, minus the duplicate signature evaluation.
@@ -354,16 +353,16 @@ def lsh_band_keys(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     )
 
 
-def bucket_member_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """All (d1 < d2) member pairs of each bucket row (`ids_col` an ASCENDING
+def bucket_member_pairs(buckets: DataFrame) -> DataFrame:
+    """All (d1 < d2) member pairs of each bucket row (`ids` an ASCENDING
     array), distinct across buckets.  Declarative explode of the in-bucket
     pair triangle -- shared by the batch (minhash_lsh_pairs / q52) and
     streaming (q372) LSH candidate paths."""
     pair_structs = F.flatten(
         F.transform(
-            ids_col,
+            "ids",
             lambda x, i: F.transform(
-                F.slice(ids_col, i + F.lit(2), F.size(ids_col)),
+                F.slice("ids", i + F.lit(2), F.size("ids")),
                 lambda y: F.struct(x.alias("d1"), y.alias("d2")),
             ),
         )
@@ -606,15 +605,16 @@ def simhash_pairs(
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) with
     cluster_id = the minimum doc_id reachable in the pair graph.
 
     Iterative min-label propagation (the DataFrame form of union-find):
     every node starts labeled with itself; each round it adopts the minimum
-    label among itself and its neighbors; fixpoint when no label changes.
-    Rounds needed ~ graph diameter -- near-dup clusters are shallow (a dup
-    cluster is near-clique), so convergence is fast.  Each round is one
+    label among itself and its neighbors; fixpoint when no label changes,
+    or 15 rounds at most.  Rounds needed ~ graph diameter -- near-dup
+    clusters are shallow (a dup cluster is near-clique), so convergence is
+    fast.  Each round is one
     join + one aggregation, all distributed; the driver only checks the
     converged flag.  localCheckpoint every round truncates the lineage so
     plan size stays constant regardless of iteration count.
@@ -631,7 +631,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
     edges = half.union(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
     nodes = edges.select(F.col("u").alias("doc_id")).distinct()
     labels = nodes.withColumn("label", F.col("doc_id")).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(15):
         neighbor_min = (
             edges.join(labels, edges.u == labels.doc_id)
             .groupBy(F.col("v").alias("doc_id"))

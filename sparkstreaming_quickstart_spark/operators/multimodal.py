@@ -102,8 +102,9 @@ def fake_resize(payload: bytes, w: int, h: int) -> bytes:
     return payload[:target].ljust(target, b"\0")
 
 
-def resize_media(df: DataFrame, w: int, h: int, id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas resize: Arrow-batched binary in, fixed-size binary out.
+def resize_media(df: DataFrame, w: int, h: int) -> DataFrame:
+    """mapInPandas resize of (doc_id, payload) rows: Arrow-batched binary
+    in, fixed-size binary out.
 
     Same plumbing contract as extract_media_meta: payloads stream through
     Python once per Arrow batch, no shuffle, per-task memory bounded by
@@ -114,23 +115,23 @@ def resize_media(df: DataFrame, w: int, h: int, id_col: str = "doc_id") -> DataF
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "resized": [fake_resize(bytes(p), w, h) for p in pdf["payload"]],
                     "out_w": pd.Series([w] * len(pdf), dtype="int32"),
                     "out_h": pd.Series([h] * len(pdf), dtype="int32"),
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, schema=RESIZED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 DHASH_SCHEMA = "doc_id bigint, b0 int, b1 int, b2 int, b3 int"
 _DHASH_W, _DHASH_H = 9, 8  # 9x8 grid -> 8x8 horizontal-gradient bits
 
 
-def dhash_bands(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Perceptual difference-hash (dHash) over binary media payloads, packed
-    as four 16-bit band keys for LSH-style banding.
+def dhash_bands(df: DataFrame) -> DataFrame:
+    """Perceptual difference-hash (dHash) over (doc_id, payload) rows,
+    packed as four 16-bit band keys for LSH-style banding.
 
     The production pipeline decodes the image, grayscale-resamples it to a
     9x8 grid, and sets bit (r, c) = pixel[r, c] < pixel[r, c + 1] -- 64
@@ -164,7 +165,7 @@ def dhash_bands(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             bands = (bits.reshape(n, 4, 16) * weights).sum(axis=2).astype(np.int32)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "b0": bands[:, 0],
                     "b1": bands[:, 1],
                     "b2": bands[:, 2],
@@ -172,4 +173,4 @@ def dhash_bands(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, schema=DHASH_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, schema=DHASH_SCHEMA)

@@ -65,12 +65,11 @@ def topk_cosine(
     corpus_id: str,
     corpus_vec: str,
     k: int = 5,
-    round_digits: int = 9,
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors per query (self excluded).
 
-    Returns (query_id, neighbor_id, cos_sim, rank); cosine rounded so the
-    value is float-discrepancy-proof against the oracle.
+    Returns (query_id, neighbor_id, cos_sim, rank); cosine rounded to 9
+    digits so the value is float-discrepancy-proof against the oracle.
     """
     from pyspark.sql import Window
 
@@ -90,7 +89,7 @@ def topk_cosine(
         .select(
             "query_id",
             "neighbor_id",
-            _pair_cosine(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"), round_digits).alias("cos_sim"),
+            _pair_cosine(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"), 9).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
@@ -111,7 +110,6 @@ def ivf_topk(
     dim: int,
     k: int = 5,
     n_cells: int = 16,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize vectors to their nearest centroid cell,
     then rank exactly within the query's cell.
@@ -125,7 +123,7 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    planes = ivf_centroids(dim, n_cells, seed)
+    planes = ivf_centroids(dim, n_cells)
     cents = [F.array(*[F.lit(float(v)) for v in row]) for row in planes]
 
     def cell(vec: Column) -> Column:
@@ -168,23 +166,21 @@ def embedding_cosine_pairs(
     id_col: str,
     vec_col: str,
     threshold: float,
-    round_digits: int = 9,
     prefilter_bits: int = 0,
     dim: int | None = None,
-    seed: int = 42,
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine similarity (id1 < id2).
 
-    The filter runs on the *rounded* cosine so Spark/oracle float noise at the
-    threshold boundary cannot flip membership.  With ``prefilter_bits == 0``
-    this is the exact all-pairs formulation (O(n^2) candidate space -- fine at
-    test scale, and the oracle-checkable ground truth).  With
-    ``prefilter_bits > 0`` candidates are restricted to pairs sharing a
-    random-hyperplane LSH bucket before the exact cosine verify -- the 100 TB
-    path: the self-join becomes an equi-join on bucket, so each vector is
-    compared against ~n/2^bits others instead of all n, at the cost of recall
-    for pairs straddling a hyperplane.
+    The filter runs on the cosine *rounded* to 9 digits so Spark/oracle float
+    noise at the threshold boundary cannot flip membership.  With
+    ``prefilter_bits == 0`` this is the exact all-pairs formulation (O(n^2)
+    candidate space -- fine at test scale, and the oracle-checkable ground
+    truth).  With ``prefilter_bits > 0`` candidates are restricted to pairs
+    sharing a random-hyperplane LSH bucket before the exact cosine verify --
+    the 100 TB path: the self-join becomes an equi-join on bucket, so each
+    vector is compared against ~n/2^bits others instead of all n, at the
+    cost of recall for pairs straddling a hyperplane.
     """
     if planes is not None:
         prefilter_bits = len(planes)
@@ -197,7 +193,7 @@ def embedding_cosine_pairs(
         # fold spelling (pinned), so the emitted cosine VALUES -- which are
         # part of this operator's output, unlike the rank-only q386 family
         # -- are unchanged; the bucket bits themselves stay JVM expressions
-        # (they must mirror sql_bucket_expr exactly).
+        # (they must mirror the oracle's sql_adaptive_bucket_cte exactly).
         b = bucketize(
             corpus.select(
                 F.col(id_col).alias("bid"), F.col(vec_col).alias("bv")
@@ -205,21 +201,16 @@ def embedding_cosine_pairs(
             "bv",
             dim,
             prefilter_bits,
-            seed,
             planes,
         ).select("bid", F.col("bv").cast("array<double>").alias("bv"), "bucket")
-        return bucketed_cosine_pairs_arrow(
-            b, "bid", "bv", threshold, round_digits
-        )
+        return bucketed_cosine_pairs_arrow(b, "bid", "bv", threshold)
     # exact path: blocked upper-triangle Arrow kernel (round 13) -- the old
     # theta-join spelling planned as a BroadcastNestedLoopJoin whose ~n^2/2
     # interpreted folds all ran on ONE task (59 s at sf0.1); the kernel
     # computes the identical rounded values (same fold association, same
     # half-away rounding -- pinned old-vs-new in tests/test_wave43.py) in
     # B(B+1)/2 parallel block tasks.
-    return all_pairs_cosine_arrow(
-        corpus, id_col, vec_col, threshold, round_digits
-    )
+    return all_pairs_cosine_arrow(corpus, id_col, vec_col, threshold)
 
 
 def knn_edges_exact(q_ids, q_mat, b_ids, b_mat, b_nrm, k: int):
@@ -255,14 +246,14 @@ def knn_edges_exact(q_ids, q_mat, b_ids, b_mat, b_nrm, k: int):
     return out_i, out_j
 
 
-def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> np.ndarray:
-    return np.random.RandomState(seed).standard_normal((nbits, dim))
+def _hyperplanes(dim: int, nbits: int) -> np.ndarray:
+    return np.random.RandomState(42).standard_normal((nbits, dim))
 
 
-def ivf_centroids(dim: int, n_cells: int, seed: int = 7) -> np.ndarray:
+def ivf_centroids(dim: int, n_cells: int) -> np.ndarray:
     """The seeded centroid matrix `ivf_topk` quantizes against (shared with
     the oracle-SQL generators so both engines see identical literals)."""
-    return np.random.RandomState(seed).standard_normal((n_cells, dim))
+    return np.random.RandomState(7).standard_normal((n_cells, dim))
 
 
 def sql_vec(row) -> str:
@@ -274,23 +265,11 @@ def sql_vec(row) -> str:
     return "[" + ", ".join(repr(float(x)) for x in row) + "]"
 
 
-def sql_cell_expr(planes: np.ndarray, vec: str = "v") -> str:
-    """DuckDB mirror of `ivf_topk`'s argmax cell assignment (first max wins
-    in both list_position and array_position)."""
-    scores = ", ".join(f"list_dot_product({vec}, {sql_vec(r)})" for r in planes)
+def sql_cell_expr(planes: np.ndarray) -> str:
+    """DuckDB mirror of `ivf_topk`'s argmax cell assignment over a vector
+    column `v` (first max wins in both list_position and array_position)."""
+    scores = ", ".join(f"list_dot_product(v, {sql_vec(r)})" for r in planes)
     return f"CAST(list_position([{scores}], list_max([{scores}])) AS INT)"
-
-
-def sql_bucket_expr(planes: np.ndarray, vec: str = "v") -> str:
-    """DuckDB mirror of `bucketize`'s sign-bit bucket id."""
-    return (
-        "CAST("
-        + " + ".join(
-            f"(CASE WHEN list_dot_product({vec}, {sql_vec(r)}) > 0 THEN {1 << i} ELSE 0 END)"
-            for i, r in enumerate(planes)
-        )
-        + " AS INT)"
-    )
 
 
 def bucketize(
@@ -298,7 +277,6 @@ def bucketize(
     vec: str,
     dim: int,
     nbits: int = 8,
-    seed: int = 42,
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """Append an LSH bucket id: sign bits of `nbits` hyperplane projections.
@@ -306,7 +284,7 @@ def bucketize(
     seeded-Gaussian default; the sign bits stay JVM fold expressions either
     way so they mirror the oracle's fold dot exactly."""
     if planes is None:
-        planes = _hyperplanes(dim, nbits, seed)
+        planes = _hyperplanes(dim, nbits)
     plane_cols = [F.array(*[F.lit(float(v)) for v in row]) for row in planes]
     bucket = sum(
         [
@@ -328,7 +306,6 @@ def ann_lsh_topk(
     dim: int,
     k: int = 5,
     nbits: int = 8,
-    seed: int = 42,
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to same-LSH-bucket
@@ -343,7 +320,6 @@ def ann_lsh_topk(
         "qv",
         dim,
         nbits,
-        seed,
         planes,
     )
     c = bucketize(
@@ -353,7 +329,6 @@ def ann_lsh_topk(
         "cv",
         dim,
         nbits,
-        seed,
         planes,
     )
     scored = (
@@ -405,14 +380,14 @@ def ann_lsh_topk(
 _LEHMER_M = 2147483647  # 2^31 - 1
 
 
-def nlist_for(n: int, floor_cells: int = 16) -> int:
-    """Largest power of two <= sqrt(n), floored at `floor_cells` -- mirrored
+def nlist_for(n: int) -> int:
+    """Largest power of two <= sqrt(n), floored at 16 -- mirrored
     exactly by SQL_NLIST_EXPR (floor(log2(n)) == n.bit_length()-1, and
     floor(log2(n)/2) == (n.bit_length()-1)//2 because the fractional part
     of log2(n) is < 1 so halving it cannot cross an integer)."""
     if n < 1:
-        return floor_cells
-    return max(floor_cells, 1 << ((n.bit_length() - 1) // 2))
+        return 16
+    return max(16, 1 << ((n.bit_length() - 1) // 2))
 
 
 # DuckDB mirror of nlist_for over a COUNT(*) scalar named `cnt`; double
@@ -473,20 +448,18 @@ _HP_STREAM_OFFSET = 1_000_000  # disjoint Lehmer stream vs. the centroid t's
 HP_MAX_BITS = 30  # bucket id stays a positive int32; 2^30 buckets ~ 1e9
 
 
-def nbits_for(n: int, target_bucket: int, floor_bits: int,
-              cap: int = HP_MAX_BITS) -> int:
-    """ceil(log2(ceil(n / target_bucket))) clamped to [floor_bits, cap]:
+def nbits_for(n: int, target_bucket: int, floor_bits: int) -> int:
+    """ceil(log2(ceil(n / target_bucket))) clamped to [floor_bits, HP_MAX_BITS]:
     the smallest bit count whose expected bucket size is <= target_bucket.
     Mirrored exactly by sql_nbits_expr -- ceil_log2(m) == (m-1).bit_length()
     for m >= 1, the same no-fractional-crossing argument as nlist_for."""
     if n < 1:
         return floor_bits
     m = -(-n // target_bucket)
-    return max(floor_bits, min(cap, (m - 1).bit_length()))
+    return max(floor_bits, min(HP_MAX_BITS, (m - 1).bit_length()))
 
 
-def sql_nbits_expr(target_bucket: int, floor_bits: int,
-                   cap: int = HP_MAX_BITS) -> str:
+def sql_nbits_expr(target_bucket: int, floor_bits: int) -> str:
     """DuckDB mirror of nbits_for over a COUNT(*) scalar named `cnt`.
     target_bucket must be a power of two so cnt/target is exact binary
     scaling (CEIL then exact); LOG2 is exact on powers of two and a
@@ -495,7 +468,7 @@ def sql_nbits_expr(target_bucket: int, floor_bits: int,
         raise ValueError("target_bucket must be a power of two")
     m = f"GREATEST(CAST(CEIL(cnt / {target_bucket}.0) AS BIGINT), 1)"
     return (
-        f"GREATEST({floor_bits}, LEAST({cap}, "
+        f"GREATEST({floor_bits}, LEAST({HP_MAX_BITS}, "
         f"CAST(CEIL(LOG2({m})) AS INT)))"
     )
 
@@ -534,28 +507,25 @@ def sql_adaptive_hyperplane_ctes(
         FROM range({HP_MAX_BITS}) t(i) WHERE i < (SELECT bits FROM hb))"""
 
 
-def sql_adaptive_bucket_cte(
-    src: str, id_col: str = "vec_id", vec: str = "v", dim: int = 64
-) -> str:
-    """`bkt` CTE body: per-row sign-bit bucket id against `planes` (from
-    sql_adaptive_hyperplane_ctes).  array_inner_product over DOUBLE[dim]
-    is the SIMD kernel measured bit-identical to list_dot_product's
+def sql_adaptive_bucket_cte(src: str) -> str:
+    """`bkt` CTE body: per-row (vec_id, v) sign-bit bucket id against
+    `planes` (from sql_adaptive_hyperplane_ctes).  array_inner_product over
+    DOUBLE[64] is the SIMD kernel measured bit-identical to list_dot_product's
     sequential fold -- the same double fold the engine's JVM `dot` runs --
     so the SIGN (all that reaches the bucket id) agrees exactly."""
     return f"""
     bkt AS (
-        SELECT s.{id_col},
+        SELECT s.vec_id,
                CAST(SUM(CASE WHEN array_inner_product(
-                        CAST(s.{vec} AS DOUBLE[{dim}]),
-                        CAST(p.w AS DOUBLE[{dim}])) > 0
+                        CAST(s.v AS DOUBLE[64]),
+                        CAST(p.w AS DOUBLE[64])) > 0
                     THEN (1 << p.i) ELSE 0 END) AS INT) AS bucket
-        FROM {src} s CROSS JOIN planes p GROUP BY s.{id_col})"""
+        FROM {src} s CROSS JOIN planes p GROUP BY s.vec_id)"""
 
 
 def sql_adaptive_cell_cte(
     src: str,
     cols: str,
-    vec: str = "v",
     dim: int = 64,
     materialized: bool = False,
 ) -> str:
@@ -589,7 +559,7 @@ def sql_adaptive_cell_cte(
                 FROM (
                     SELECT s.vec_id, c.j,
                            ROUND(array_inner_product(s.vv, c.wa), 9) AS sc
-                    FROM (SELECT vec_id, CAST({vec} AS DOUBLE[{dim}]) AS vv
+                    FROM (SELECT vec_id, CAST(v AS DOUBLE[{dim}]) AS vv
                           FROM {src}) s
                     CROSS JOIN (SELECT j, CAST(w AS DOUBLE[{dim}]) AS wa
                                 FROM cents) c)) WHERE rk = 1) a USING (vec_id))"""
@@ -665,7 +635,6 @@ def panel_topk_arrow(
     panel_ids,
     panel_mat,
     k: int,
-    round_digits: int = 9,
     fold_values: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine CANDIDATES of a small fixed query panel against a
@@ -705,14 +674,11 @@ def panel_topk_arrow(
                 if fold_values:
                     bn = np.sqrt(_seq_self_dot(B))
                     sims = _round_half_away(
-                        _seq_dot_block(P, B) / (pn[:, None] * bn[None, :]),
-                        round_digits,
+                        _seq_dot_block(P, B) / (pn[:, None] * bn[None, :]), 9
                     )
                 else:
                     bn = np.sqrt((B * B).sum(axis=1))
-                    sims = np.round(
-                        (P @ B.T) / (pn[:, None] * bn[None, :]), round_digits
-                    )
+                    sims = np.round((P @ B.T) / (pn[:, None] * bn[None, :]), 9)
             sims[~np.isfinite(sims)] = -np.inf
             n = sims.shape[1]
             kk = min(k, n)
@@ -821,20 +787,23 @@ def _round_half_away(x: np.ndarray, digits: int) -> np.ndarray:
     return np.where(np.isfinite(t), out, x)
 
 
+# Row slab of the pair kernels below: executor memory per slab is
+# _CHUNK x bucket (or block) doubles, never the pair square.
+_CHUNK = 512
+
+
 def bucketed_cosine_pairs_arrow(
     bucketed: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float,
-    round_digits: int = 9,
-    chunk: int = 512,
 ) -> DataFrame:
     """Within-bucket (id1 < id2) cosine pairs >= threshold via a per-bucket
     Arrow kernel: one shuffle on bucket, then each bucket's pair block is
     scored with fold-association vector ops (see _seq_dot_block) in
-    `chunk`-row slabs, so executor memory is chunk x bucket doubles, never
+    `_CHUNK`-row slabs, so executor memory is _CHUNK x bucket doubles, never
     the pair square.  Emits (id1, id2, cos_sim) with cos_sim =
-    round(dot/(n1*n2), round_digits) -- bit-identical to the JVM-fold
+    round(dot/(n1*n2), 9) -- bit-identical to the JVM-fold
     spelling it replaces (q65: sf1 spark side ~10x), zero-norm rows nulled
     out by the nan -> drop rule (try_divide convention)."""
     import pandas as pd
@@ -855,12 +824,12 @@ def bucketed_cosine_pairs_arrow(
         out1: list[np.ndarray] = []
         out2: list[np.ndarray] = []
         outc: list[np.ndarray] = []
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
+        for lo in range(0, m, _CHUNK):
+            hi = min(lo + _CHUNK, m)
             dots = _seq_dot_block(M[lo:hi], M)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = _round_half_away(
-                    dots / (nrm[lo:hi][:, None] * nrm[None, :]), round_digits
+                    dots / (nrm[lo:hi][:, None] * nrm[None, :]), 9
                 )
             # strict upper triangle in SORTED-id space == id1 < id2
             rows, cols = np.nonzero(
@@ -895,7 +864,6 @@ def bucketed_euclid_pairs_arrow(
     vec_col: str,
     threshold: float,
     round_digits: int = 6,
-    chunk: int = 512,
 ) -> DataFrame:
     """Within-bucket (id1 < id2) EUCLIDEAN pairs with dist < threshold via a
     per-bucket Arrow kernel -- the metric twin of bucketed_cosine_pairs_arrow
@@ -906,7 +874,7 @@ def bucketed_euclid_pairs_arrow(
     the exact left-to-right fold association of the JVM
     aggregate(zip_with(...)) spelling it replaces (k-loop of fused vector
     ops, _seq_dot_block discipline) and half-away-from-zero rounding
-    (F.round parity).  Executor memory is chunk x bucket doubles, never the
+    (F.round parity).  Executor memory is _CHUNK x bucket doubles, never the
     pair square."""
     import pandas as pd
 
@@ -927,8 +895,8 @@ def bucketed_euclid_pairs_arrow(
         out1: list[np.ndarray] = []
         out2: list[np.ndarray] = []
         outd: list[np.ndarray] = []
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
+        for lo in range(0, m, _CHUNK):
+            hi = min(lo + _CHUNK, m)
             # fold-association squared distance: acc = acc + (x_k - y_k)^2
             # in k order (bit-identical to aggregate(zip_with(...)))
             acc = np.zeros((hi - lo, m))
@@ -967,9 +935,7 @@ def all_pairs_cosine_arrow(
     id_col: str,
     vec_col: str,
     threshold: float,
-    round_digits: int = 9,
     n_blocks: int | None = None,
-    chunk: int = 512,
 ) -> DataFrame:
     """Exact all-pairs (id1 < id2) cosine >= threshold as a BLOCKED
     upper-triangle Arrow kernel -- the parallel, vectorized spelling of the
@@ -1043,12 +1009,12 @@ def all_pairs_cosine_arrow(
             ids = ids[order]
             M = np.stack(pdf["v"].to_numpy()).astype(np.float64)[order]
             nrm = np.sqrt(_seq_self_dot(M))
-            for lo in range(0, m, chunk):
-                hi = min(lo + chunk, m)
+            for lo in range(0, m, _CHUNK):
+                hi = min(lo + _CHUNK, m)
                 dots = _seq_dot_block(M[lo:hi], M)
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = _round_half_away(
-                        dots / (nrm[lo:hi][:, None] * nrm[None, :]), round_digits
+                        dots / (nrm[lo:hi][:, None] * nrm[None, :]), 9
                     )
                 # strict upper triangle in SORTED-id space == id1 < id2
                 rows, cols = np.nonzero(
@@ -1070,12 +1036,12 @@ def all_pairs_cosine_arrow(
             A, Bm = M[a_sel], M[b_sel]
             na = np.sqrt(_seq_self_dot(A))
             nb = np.sqrt(_seq_self_dot(Bm))
-            for lo in range(0, len(ida), chunk):
-                hi = min(lo + chunk, len(ida))
+            for lo in range(0, len(ida), _CHUNK):
+                hi = min(lo + _CHUNK, len(ida))
                 dots = _seq_dot_block(A[lo:hi], Bm)
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = _round_half_away(
-                        dots / (na[lo:hi][:, None] * nb[None, :]), round_digits
+                        dots / (na[lo:hi][:, None] * nb[None, :]), 9
                     )
                 rows, cols = np.nonzero(cos >= threshold)
                 if len(rows):

@@ -448,7 +448,6 @@ def _ensure_loaded() -> None:
     from . import wave39  # noqa: F401
     from . import wave40  # noqa: F401
     from . import wave42  # noqa: F401
-    from . import livejars  # noqa: F401
 
     # First occurrence wins: a rotation may promote a name to the head while
     # its old position remains further down the list.

@@ -29,46 +29,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import MINHASH_BANDS, MINHASH_BUCKET_CAP, MINHASH_HASHES, MINHASH_SEED
 from ..sources.catalog import load_table
 from . import register
 from .llm import _jaccard_oracle
 
-# Mirror q52's parameters exactly: same shingles, same signature family,
-# same banding, same hot-bucket cap, same verify threshold -- the streaming
-# output must equal minhash_lsh_pairs' batch output row for row.
+# Mirror q52's parameters exactly: same shingles and verify threshold as its
+# minhash_lsh_pairs call, and dedup's MINHASH_* signature family, banding
+# and hot-bucket cap -- the streaming output must equal minhash_lsh_pairs'
+# batch output row for row.
 _SMH_N = 3
 _SMH_T = 0.7
-_SMH_HASHES = 96
-_SMH_BANDS = 24
-_SMH_SEED = 42
-_SMH_CAP = 256
-
-
-def _smh_schemas():
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("band", IntegerType()),
-            StructField("band_key", LongType()),
-            StructField("ids", ArrayType(LongType())),
-            StructField("n_ids", LongType()),
-            StructField("n_rows", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("ids", ArrayType(LongType())),
-            StructField("n_rows", LongType()),
-        ]
-    )
-    return out_schema, state_schema
 
 
 def _smh_update(cap: int):
@@ -284,15 +255,15 @@ def q372_stream_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = hashed_shingle_docs(stream, "text", "doc_id", _SMH_N)
     # spread=False: the repartition warm-up probes .rdd, which streaming
     # DataFrames forbid; the file-replay source already splits per file.
-    sigs = minhash_signatures(docs, _SMH_HASHES, _SMH_SEED, spread=False)
-    banded = lsh_band_keys(sigs, _SMH_HASHES, _SMH_BANDS)
+    sigs = minhash_signatures(docs, MINHASH_HASHES, MINHASH_SEED, spread=False)
+    banded = lsh_band_keys(sigs, MINHASH_HASHES, MINHASH_BANDS)
     # Sharded state (round 13): keying state per bucket costs a per-KEY
     # pandas round-trip (~1.2M keys at sf1 -> 289 s of pure overhead);
     # the shard kernel vectorizes whole shards (24 x _SMH_SHARDS keys).
     res = banded.withColumn(
         "shard", F.pmod(F.col("band_key"), F.lit(_SMH_SHARDS))
     ).groupBy("band", "shard").applyInPandasWithState(
-        _smh_shard_update(_SMH_CAP),
+        _smh_shard_update(MINHASH_BUCKET_CAP),
         out_schema,
         state_schema,
         "update",
@@ -306,7 +277,7 @@ def q372_stream_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s.ids").alias("ids"), F.col("s.n_ids").alias("n_ids"))
     )
     buckets = final.filter(
-        (F.col("n_ids") >= 2) & (F.col("n_ids") <= _SMH_CAP)
+        (F.col("n_ids") >= 2) & (F.col("n_ids") <= MINHASH_BUCKET_CAP)
     ).select("ids")
     cand = bucket_member_pairs(buckets)
     d = load_table(spark, sf_dir, "documents")
@@ -469,7 +440,7 @@ def _tl_u_exprs_sql() -> str:
     agree exactly -- the kernel was designed for this replay."""
     from ..operators.dedup import _P, _hash_family
 
-    fam = _hash_family(_TL_HASHES, _SMH_SEED)
+    fam = _hash_family(_TL_HASHES, MINHASH_SEED)
     return ",\n            ".join(
         f"list_min(list_transform(xs, h -> ({a} * (h % {_P}) + {b}) % {_P})) AS u{j}"
         for j, (a, b) in enumerate(fam)
@@ -592,7 +563,7 @@ def q375_tfidf_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
         ).alias("xs"),
     ).filter(F.size("xs") > 0)
-    sigs = minhash_signatures(docs, _TL_HASHES, _SMH_SEED)
+    sigs = minhash_signatures(docs, _TL_HASHES, MINHASH_SEED)
     band_keys = [
         F.concat_ws(
             "|", *[F.col("mh")[_TL_ROWS * b + r] for r in range(_TL_ROWS)]
@@ -605,7 +576,7 @@ def q375_tfidf_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         banded.groupBy("band", "key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= _SMH_CAP))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= MINHASH_BUCKET_CAP))
     )
     cand = bucket_member_pairs(buckets)
     # Round-14 verify rewrite (guide §2.3 "decide with small rows" / §4.2):

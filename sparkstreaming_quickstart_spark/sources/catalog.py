@@ -34,11 +34,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimensions that should always be broadcast in joins (row counts at
-# sf1.0 are bounded: region=5, nation=25; supplier/part grow but stay tiny
-# relative to the fact tables).
-BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame with engine-canonical schema."""

@@ -41,32 +41,10 @@ def run_foreach_batch(
     return writer.trigger(availableNow=True).start()
 
 
-def run_foreach_rows(
-    stream: DataFrame,
-    writer,
-    checkpoint: str | None = None,
-) -> StreamingQuery:
-    """Row-at-a-time programmable sink (`writeStream.foreach`).
-
-    The closest Structured Streaming analogue of the reference's per-record
-    foreach println (`Processor.java:142-146`): `writer.process(row)` runs on
-    executors once per row, with an open(partition_id, epoch_id)/close(err)
-    lifecycle per partition per epoch -- which is also where the reference's
-    "output lands in executor stdout" gotcha lives on a real cluster.
-    Row-at-a-time Python is the slow path by design; `run_foreach_batch` is
-    the scale sink.  This exists for protocol parity and side-effecting
-    integrations that genuinely need per-row delivery semantics.
-    """
-    out = stream.writeStream.foreach(writer)
-    if checkpoint:
-        out = out.option("checkpointLocation", checkpoint)
-    return out.trigger(availableNow=True).start()
-
-
-def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str = "append") -> str:
-    """Drain a stream into an in-memory table with availableNow; returns the
-    table name.  This is the test/driver harness for streaming queries, on
-    Spark's temporary checkpoint.
+def run_to_memory(stream: DataFrame, output_mode: str = "append") -> str:
+    """Drain a stream into an in-memory table `mem_<uuid>` with availableNow;
+    returns the table name.  This is the test/driver harness for streaming
+    queries, on Spark's temporary checkpoint.
 
     State-partition bound: a streaming query materializes one state store
     instance per shuffle partition, fixed at first checkpoint.  Under an
@@ -82,7 +60,7 @@ def run_to_memory(stream: DataFrame, name: str | None = None, output_mode: str =
     cores = spark.sparkContext.defaultParallelism
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    table = name or f"mem_{uuid.uuid4().hex[:8]}"
+    table = f"mem_{uuid.uuid4().hex[:8]}"
     try:
         try:
             prev_n = int(prev)

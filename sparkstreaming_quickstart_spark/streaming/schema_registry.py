@@ -32,8 +32,8 @@ from collections.abc import Callable, Iterable
 from urllib.request import urlopen
 
 
-def _stdlib_http_get(url: str, timeout: float = 10.0) -> str:
-    with urlopen(url, timeout=timeout) as resp:  # noqa: S310 (http by design)
+def _stdlib_http_get(url: str) -> str:
+    with urlopen(url, timeout=10.0) as resp:  # noqa: S310 (http by design)
         return resp.read().decode("utf-8")
 
 

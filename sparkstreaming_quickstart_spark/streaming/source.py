@@ -130,30 +130,3 @@ def kafka_stream(
         out = out.withColumn("record", from_avro(payload, avro_schema_json))
     return out
 
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source shaped like the events table.
-
-    The rate source is the brokerless stand-in for load/soak testing the
-    streaming pipeline (SURVEY.md section 2.B "File/rate stream source"):
-    unbounded (timestamp, value) rows at a controlled rate, mapped here onto
-    the events schema so every downstream operator (windows, dedup, stateful)
-    accepts it unchanged.
-    """
-    tune(spark)
-    df = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return df.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 100).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("click"), F.lit("view"), F.lit("purchase"), F.lit("error")),
-            (F.col("value") % 4 + 1).cast("int"),
-        ).alias("event_type"),
-        (F.pmod(F.col("value") * 7919, F.lit(10000)) / 100.0).alias("value"),
-        F.to_json(F.struct((F.col("value") % 97).alias("k"))).alias("props"),
-    )

@@ -136,12 +136,11 @@ def test_schema_id_dispatch_with_evolution(spark):
     assert (out[3].name, out[3].age, out[3].email, out[3].schema_id) == ("alan", 41, None, 1)
 
 
-def test_streaming_wire_decode_end_to_end(spark):
+def test_streaming_wire_decode_end_to_end(spark, tmp_path):
     # The composed path the round-1 verdict asked for: wire-format messages
     # flow through a (file-backed) stream, header strip + per-id Avro decode
     # happen inside the streaming query, and the drained result is typed rows.
     import os
-    import tempfile
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -155,7 +154,7 @@ def test_streaming_wire_decode_end_to_end(spark):
         {"name": "name", "type": "string"}, {"name": "age", "type": "long"}]}
     rows = [(i, wire_encode(1, {"name": f"u{i}", "age": i}, v1)) for i in range(20)]
     src_schema = "offset long, value binary"
-    d = tempfile.mkdtemp(prefix="ssq-wire-")
+    d = str(tmp_path)
     spark.createDataFrame(rows, src_schema).coalesce(1).write.mode("overwrite").parquet(d)
 
     stream = spark.readStream.schema("offset long, value binary").parquet(d)

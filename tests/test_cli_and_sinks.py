@@ -6,7 +6,6 @@ import glob
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -15,10 +14,10 @@ from sparkstreaming_quickstart_spark.sources.catalog import load_table
 from sparkstreaming_quickstart_spark.streaming.source import events_stream
 
 
-def test_cli_replay_drain(sf_dir):
+def test_cli_replay_drain(sf_dir, tmp_path):
     """The reference's main() path: CLI -> pipeline -> console sink, drained.
     Runs as a subprocess (fresh session like a real spark-submit)."""
-    ckpt = tempfile.mkdtemp(prefix="ssq-cli-")
+    ckpt = str(tmp_path)
     out = subprocess.run(
         [
             sys.executable,
@@ -93,10 +92,9 @@ def test_cli_requires_kafka_args():
     assert "--zookeeper" in out.stderr
 
 
-def test_streaming_parquet_sink(spark, sf_dir):
+def test_streaming_parquet_sink(spark, sf_dir, tmp_path):
     """Stream -> parquet files + checkpoint; batch read-back equals input."""
-    outdir = tempfile.mkdtemp(prefix="ssq-parquet-sink-")
-    ckpt = tempfile.mkdtemp(prefix="ssq-parquet-ckpt-")
+    outdir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
         events_stream(spark, sf_dir)
         .writeStream.format("parquet")
@@ -111,9 +109,9 @@ def test_streaming_parquet_sink(spark, sf_dir):
     assert glob.glob(os.path.join(ckpt, "offsets", "*")), "offset WAL missing"
 
 
-def test_partitioned_write_prunes(spark, sf_dir):
+def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     """partitionBy write -> filtered read hits only one partition directory."""
-    outdir = tempfile.mkdtemp(prefix="ssq-part-")
+    outdir = str(tmp_path / "events")
     e = load_table(spark, sf_dir, "events")
     e.write.partitionBy("event_type").mode("overwrite").parquet(outdir)
     back = spark.read.parquet(outdir).filter(F.col("event_type") == "click")

@@ -298,7 +298,7 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-def test_sequence_packing_oversized_doc_gets_own_bin(spark):
+def test_sequence_packing_oversized_doc_gets_own_bin(spark, tmp_path):
     """A document larger than the 512-token budget must occupy a bin by
     itself (never merged into the previous bin), and packing must resume
     normally after it -- the greedy reset edge the recursive-CTE oracle and
@@ -319,9 +319,7 @@ def test_sequence_packing_oversized_doc_gets_own_bin(spark):
         "lang", "doc_id", F.trim("text").alias("text")
     )
 
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ssq-pack-")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     # reuse the registered query against this fixture directory
     from sparkstreaming_quickstart_spark.queries.traindata import q145_sequence_packing

@@ -54,9 +54,9 @@ def test_foreach_batch_sink_collects_all_rows(spark, sf_dir):
     assert sum(seen) == total
 
 
-def test_checkpoint_recovery_no_duplicates(spark, sf_dir):
+def test_checkpoint_recovery_no_duplicates(spark, sf_dir, tmp_path):
     """Restarting a drained query on the same checkpoint reprocesses nothing."""
-    checkpoint = tempfile.mkdtemp(prefix="ssq-recovery-")
+    checkpoint = str(tmp_path)
     counts: list[int] = []
 
     def sink(df, epoch_id):
@@ -103,30 +103,6 @@ def test_transform_with_state_gated_on_protobuf(spark, sf_dir):
             .collect()
         )
         assert got == want
-
-
-def test_rate_stream_smoke(spark):
-    # Rate source mapped onto the events shape: unbounded load-test input for
-    # the same downstream operators.  Drain a moment's worth and check shape.
-    import time
-    import uuid
-
-    from sparkstreaming_quickstart_spark.streaming.source import rate_stream
-
-    df = rate_stream(spark, rows_per_second=200)
-    assert df.isStreaming
-    name = f"rate_{uuid.uuid4().hex[:8]}"
-    q = df.writeStream.format("memory").queryName(name).outputMode("append").start()
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline and spark.table(name).count() == 0:
-            time.sleep(0.5)
-        rows = spark.table(name).limit(10).collect()
-    finally:
-        q.stop()
-    assert rows, "rate stream produced no rows within 30s"
-    assert set(rows[0].asDict()) == {"event_id", "ts", "user_id", "event_type", "value", "props"}
-    assert rows[0].event_type in {"click", "view", "purchase", "error"}
 
 
 def test_rocksdb_state_store_matches_default(spark, sf_dir):
@@ -209,41 +185,6 @@ def test_watermark_finalizes_windows_and_drops_post_eviction_late_data(spark, tm
     hour10 = [r["count"] for r in spark.table(name).collect() if r["w"].start.hour == 10]
     # exactly one finalized emission, without the post-eviction straggler
     assert hour10 == [2], spark.table(name).collect()
-
-
-def test_foreach_row_sink_delivers_every_row(spark, sf_dir, tmp_path):
-    """Row-level foreach sink (reference parity A3: per-record delivery,
-    Processor.java:142-146): every event row reaches writer.process exactly
-    once, under the open/process/close partition-epoch lifecycle."""
-    from sparkstreaming_quickstart_spark.streaming.pipeline import run_foreach_rows
-
-    out = tmp_path / "rows"
-    out.mkdir()
-
-    class RowWriter:
-        def open(self, partition_id, epoch_id):
-            self._fh = open(out / f"p{partition_id}_e{epoch_id}", "a")
-            return True
-
-        def process(self, row):
-            self._fh.write(f"{row.event_id}\n")
-
-        def close(self, error):
-            self._fh.close()
-            if error:
-                raise error
-
-    q = run_foreach_rows(events_stream(spark, sf_dir), RowWriter())
-    q.awaitTermination()
-    seen = sorted(
-        int(line)
-        for f in out.iterdir()
-        for line in f.read_text().splitlines()
-    )
-    expected = sorted(
-        r.event_id for r in load_table(spark, sf_dir, "events").select("event_id").collect()
-    )
-    assert seen == expected
 
 
 def test_streaming_query_listener_observes_progress(spark, sf_dir):
@@ -396,7 +337,7 @@ def test_foreach_batch_fanout_writes_two_sinks_consistently(spark, sf_dir, tmp_p
     assert ids1 == expected and ids2 == expected and len(ids1) == n
 
 
-def test_streaming_observe_metrics_surface_in_progress(spark, sf_dir):
+def test_streaming_observe_metrics_surface_in_progress(spark, sf_dir, tmp_path):
     """df.observe on a STREAMING query: per-batch custom metrics (row count,
     null count, value sum) surface in StreamingQueryProgress.observedMetrics
     -- the in-band data-quality monitoring pattern (q213's rules, attached
@@ -437,7 +378,7 @@ def test_streaming_observe_metrics_surface_in_progress(spark, sf_dir):
             stream.writeStream.format("memory")
             .queryName(name)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ssq-obs-"))
+            .option("checkpointLocation", str(tmp_path))
             .start()
         )
         q.awaitTermination()
@@ -754,6 +695,44 @@ def test_runtime_confs_differ_from_spark_defaults(spark):
             entry = entry.fallback()  # e.g. arrow.pyspark.enabled -> arrow.enabled
         convert = entry.valueConverter()
         assert convert.apply(value) != convert.apply(entry.defaultValueString()), key
+
+
+def test_every_defaulted_parameter_is_passed_by_some_call():
+    """A defaulted parameter of a module-level package function that no call
+    passes, by keyword or by position, is an option no caller sets: make it
+    a constant.  Calls match the callee by name, across the package,
+    tools/, perfbench/, tests/, bench.py and __spark_entry__.py."""
+    import ast
+    import math
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    package = sorted((root / "sparkstreaming_quickstart_spark").rglob("*.py"))
+    callers = package + [p for d in ("tools", "perfbench", "tests") for p in sorted((root / d).rglob("*.py"))]
+    callers += [root / "bench.py", root / "__spark_entry__.py"]
+    n_positional: dict[str, float] = {}
+    keywords: set[tuple[str, str | None]] = set()  # (callee, None): a **kwargs call
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                starred = any(isinstance(a, ast.Starred) for a in node.args)
+                n_positional[name] = max(n_positional.get(name, 0), math.inf if starred else len(node.args))
+                keywords.update((name, k.arg) for k in node.keywords)
+    offenders = []
+    for path in package:
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            positional = fn.args.posonlyargs + fn.args.args
+            first = len(positional) - len(fn.args.defaults)
+            defaulted = [(i, p.arg) for i, p in enumerate(positional) if i >= first]
+            defaulted += [(math.inf, p.arg) for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+            for index, param in defaulted:
+                if {(fn.name, param), (fn.name, None)} & keywords or n_positional.get(fn.name, 0) > index:
+                    continue
+                offenders.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}.{param}")
+    assert not offenders, "defaulted parameters that no call passes:\n" + "\n".join(offenders)
 
 
 def test_run_to_memory_holds_shuffle_partitions_only_across_start(spark, sf_dir, monkeypatch):

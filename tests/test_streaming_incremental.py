@@ -4,18 +4,16 @@ incremental aggregation still converges to the batch answer."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from sparkstreaming_quickstart_spark.sources.catalog import load_table
 from sparkstreaming_quickstart_spark.streaming.pipeline import run_foreach_batch
 
 
-def test_multi_batch_replay_incremental_agg(spark, sf_dir):
+def test_multi_batch_replay_incremental_agg(spark, sf_dir, tmp_path):
     # Split events into 4 files so availableNow + maxFilesPerTrigger=1 yields
     # 4 micro-batches.
-    splitdir = tempfile.mkdtemp(prefix="ssq-split-")
+    splitdir = str(tmp_path)
     src = load_table(spark, sf_dir, "events")
     src.repartition(4).write.mode("overwrite").parquet(splitdir)
 
@@ -41,7 +39,7 @@ def test_multi_batch_replay_incremental_agg(spark, sf_dir):
     assert totals == expected
 
 
-def test_watermark_drops_late_data_across_batches(spark, sf_dir):
+def test_watermark_drops_late_data_across_batches(spark, sf_dir, tmp_path):
     """Late-data semantics, not just prefix consistency: rows arriving in a
     later micro-batch with event times older than the watermark are DROPPED
     from the windowed aggregation.  Watermark updates lag one batch, so the
@@ -66,8 +64,8 @@ def test_watermark_drops_late_data_across_batches(spark, sf_dir):
         ontime.filter(F.col("event_id") % 2 == 1),
         late,
     ]
-    workdir = tempfile.mkdtemp(prefix="ssq-late-parts-")
-    stage = tempfile.mkdtemp(prefix="ssq-late-stage-")
+    workdir, stage = str(tmp_path / "parts"), str(tmp_path / "stage")
+    os.mkdir(stage)
     now = time.time()
     for i, part in enumerate(splits):
         part.coalesce(1).write.parquet(os.path.join(workdir, f"p{i}"))
@@ -94,7 +92,7 @@ def test_watermark_drops_late_data_across_batches(spark, sf_dir):
         .queryName("late_drop_test")
         .outputMode("append")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ssq-late-ck-"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )
     q.awaitTermination()
@@ -118,7 +116,7 @@ def test_watermark_drops_late_data_across_batches(spark, sf_dir):
     assert got == expected
 
 
-def test_stateful_update_mode_final_state_under_multi_batch(spark, sf_dir):
+def test_stateful_update_mode_final_state_under_multi_batch(spark, sf_dir, tmp_path):
     # Update-mode stateful queries emit one row per (key, micro-batch); the
     # registered q74 reduction must yield exactly the final state per key even
     # when the replay is split across several micro-batches (the single-batch
@@ -127,7 +125,7 @@ def test_stateful_update_mode_final_state_under_multi_batch(spark, sf_dir):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    splitdir = tempfile.mkdtemp(prefix="ssq-split74-")
+    splitdir = str(tmp_path)
     src = load_table(spark, sf_dir, "events")
     src.repartition(3).write.mode("overwrite").parquet(splitdir)
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import tempfile
 
 import pandas as pd
 from pyspark.sql import Window
@@ -17,7 +16,7 @@ from pyspark.sql import functions as F
 from sparkstreaming_quickstart_spark.sources.catalog import load_table
 
 
-def test_stream_reservoir_multibatch_equals_batch(spark, sf_dir):
+def test_stream_reservoir_multibatch_equals_batch(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from sparkstreaming_quickstart_spark.queries.wave26 import (
@@ -28,7 +27,7 @@ def test_stream_reservoir_multibatch_equals_batch(spark, sf_dir):
     )
     from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory
 
-    splitdir = tempfile.mkdtemp(prefix="ssq-split340-")
+    splitdir = str(tmp_path)
     src = load_table(spark, sf_dir, "events")
     src.repartition(3).write.mode("overwrite").parquet(splitdir)
 

@@ -490,13 +490,12 @@ def test_linear_mmd_matches_numpy(spark, sf_dir):
     assert abs(float(np.mean(hs_same))) < 1e-15
 
 
-def test_stream_kmv_multibatch_equals_batch_and_hashlib(spark, sf_dir):
+def test_stream_kmv_multibatch_equals_batch_and_hashlib(spark, sf_dir, tmp_path):
     """q367: the bottom-k SET state must equal the batch sketch under a
     forced 3-micro-batch replay (set union is associative/commutative/
     idempotent -- the property the full value oracle rides on), and the
     normalized hashes must replay through hashlib."""
     import hashlib
-    import tempfile
 
     from pyspark.sql import functions as SF
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -512,7 +511,7 @@ def test_stream_kmv_multibatch_equals_batch_and_hashlib(spark, sf_dir):
     from sparkstreaming_quickstart_spark.sources.catalog import load_table
     from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory
 
-    splitdir = tempfile.mkdtemp(prefix="ssq-split367-")
+    splitdir = str(tmp_path)
     src = load_table(spark, sf_dir, "events")
     src.repartition(3).write.mode("overwrite").parquet(splitdir)
 

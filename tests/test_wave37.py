@@ -8,18 +8,20 @@ kernel's cap/merge behavior is additionally pinned split-free at unit level.
 
 from __future__ import annotations
 
-import tempfile
-
 import pandas as pd
 from pyspark.sql import functions as F
 
 from sparkstreaming_quickstart_spark.sources.catalog import load_table
 
 
-def test_stream_minhash_multibatch_equals_batch(spark, sf_dir):
+def test_stream_minhash_multibatch_equals_batch(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from sparkstreaming_quickstart_spark.operators.dedup import (
+        MINHASH_BANDS,
+        MINHASH_BUCKET_CAP,
+        MINHASH_HASHES,
+        MINHASH_SEED,
         bucket_member_pairs,
         exact_jaccard_verify,
         hashed_shingle_docs,
@@ -28,11 +30,7 @@ def test_stream_minhash_multibatch_equals_batch(spark, sf_dir):
         minhash_signatures,
     )
     from sparkstreaming_quickstart_spark.queries.wave37 import (
-        _SMH_BANDS,
-        _SMH_CAP,
-        _SMH_HASHES,
         _SMH_N,
-        _SMH_SEED,
         _SMH_SHARDS,
         _SMH_T,
         _smh_shard_schemas,
@@ -40,7 +38,7 @@ def test_stream_minhash_multibatch_equals_batch(spark, sf_dir):
     )
     from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory
 
-    splitdir = tempfile.mkdtemp(prefix="ssq-split372-")
+    splitdir = str(tmp_path)
     src = load_table(spark, sf_dir, "documents")
     src.repartition(3).write.mode("overwrite").parquet(splitdir)
 
@@ -52,12 +50,12 @@ def test_stream_minhash_multibatch_equals_batch(spark, sf_dir):
         .select("doc_id", "text")
     )
     docs = hashed_shingle_docs(stream, "text", "doc_id", _SMH_N)
-    sigs = minhash_signatures(docs, _SMH_HASHES, _SMH_SEED, spread=False)
-    banded = lsh_band_keys(sigs, _SMH_HASHES, _SMH_BANDS)
+    sigs = minhash_signatures(docs, MINHASH_HASHES, MINHASH_SEED, spread=False)
+    banded = lsh_band_keys(sigs, MINHASH_HASHES, MINHASH_BANDS)
     res = banded.withColumn(
         "shard", F.pmod(F.col("band_key"), F.lit(_SMH_SHARDS))
     ).groupBy("band", "shard").applyInPandasWithState(
-        _smh_shard_update(_SMH_CAP),
+        _smh_shard_update(MINHASH_BUCKET_CAP),
         out_schema,
         state_schema,
         "update",
@@ -77,7 +75,7 @@ def test_stream_minhash_multibatch_equals_batch(spark, sf_dir):
         .select(F.col("s.ids").alias("ids"), F.col("s.n_ids").alias("n_ids"))
     )
     buckets = final.filter(
-        (F.col("n_ids") >= 2) & (F.col("n_ids") <= _SMH_CAP)
+        (F.col("n_ids") >= 2) & (F.col("n_ids") <= MINHASH_BUCKET_CAP)
     ).select("ids")
     cand = bucket_member_pairs(buckets)
     got = (
@@ -298,7 +296,7 @@ def test_bucketed_table_prunes_buckets_on_key_filter(spark, sf_dir):
             spark.conf.set(conf, old)
 
 
-def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
+def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir, tmp_path):
     """Round-10 verdict #6: the split-independence test forces micro-batch
     BOUNDARIES but not DISORDER.  Here the corpus is replayed twice under
     two different adversarial orderings -- docs shuffled by salted hash
@@ -308,11 +306,14 @@ def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
     equal to q52's batch output.  This is the min-K set-union state's
     order-freedom proven at the streaming-replay level, not just the unit
     kernel."""
-    import tempfile
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from sparkstreaming_quickstart_spark.operators.dedup import (
+        MINHASH_BANDS,
+        MINHASH_BUCKET_CAP,
+        MINHASH_HASHES,
+        MINHASH_SEED,
         bucket_member_pairs,
         exact_jaccard_verify,
         hashed_shingle_docs,
@@ -321,11 +322,7 @@ def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
         minhash_signatures,
     )
     from sparkstreaming_quickstart_spark.queries.wave37 import (
-        _SMH_BANDS,
-        _SMH_CAP,
-        _SMH_HASHES,
         _SMH_N,
-        _SMH_SEED,
         _SMH_SHARDS,
         _SMH_T,
         _smh_shard_schemas,
@@ -336,7 +333,7 @@ def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
     src = load_table(spark, sf_dir, "documents")
 
     def replay(salt: str) -> pd.DataFrame:
-        splitdir = tempfile.mkdtemp(prefix=f"ssq-ooo372-{salt}-")
+        splitdir = str(tmp_path / salt)
         shuffled = (
             src.withColumn("__h", F.md5(F.concat_ws("|", F.lit(salt), "doc_id")))
             .repartition(3, F.col("__h"))
@@ -352,12 +349,12 @@ def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
             .select("doc_id", "text")
         )
         docs = hashed_shingle_docs(stream, "text", "doc_id", _SMH_N)
-        sigs = minhash_signatures(docs, _SMH_HASHES, _SMH_SEED, spread=False)
-        banded = lsh_band_keys(sigs, _SMH_HASHES, _SMH_BANDS)
+        sigs = minhash_signatures(docs, MINHASH_HASHES, MINHASH_SEED, spread=False)
+        banded = lsh_band_keys(sigs, MINHASH_HASHES, MINHASH_BANDS)
         res = banded.withColumn(
             "shard", F.pmod(F.col("band_key"), F.lit(_SMH_SHARDS))
         ).groupBy("band", "shard").applyInPandasWithState(
-            _smh_shard_update(_SMH_CAP),
+            _smh_shard_update(MINHASH_BUCKET_CAP),
             out_schema,
             state_schema,
             "update",
@@ -371,7 +368,7 @@ def test_stream_minhash_out_of_order_replay_is_byte_identical(spark, sf_dir):
             .select(F.col("s.ids").alias("ids"), F.col("s.n_ids").alias("n_ids"))
         )
         buckets = final.filter(
-            (F.col("n_ids") >= 2) & (F.col("n_ids") <= _SMH_CAP)
+            (F.col("n_ids") >= 2) & (F.col("n_ids") <= MINHASH_BUCKET_CAP)
         ).select("ids")
         cand = bucket_member_pairs(buckets)
         return (

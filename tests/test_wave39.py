@@ -228,11 +228,10 @@ def test_q388_semdedup_report_invariants(spark, sf_dir):
             assert kept == r["chars_total"]
 
 
-def test_q392_stream_monitor_multibatch_equals_batch(spark, sf_dir):
+def test_q392_stream_monitor_multibatch_equals_batch(spark, sf_dir, tmp_path):
     """q392's complete-mode counts must equal the batch computation (q390's
     values) under a FORCED multi-batch replay -- counts are associative, so
     the final snapshot is split-independent.  Mirrors q372's discipline."""
-    import tempfile
 
     import pandas as pd
     from pyspark.sql import functions as F
@@ -250,7 +249,7 @@ def test_q392_stream_monitor_multibatch_equals_batch(spark, sf_dir):
     from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory
 
     src = load_table(spark, sf_dir, "embeddings")
-    splitdir = tempfile.mkdtemp(prefix="ssq-392split-")
+    splitdir = str(tmp_path)
     src.repartition(3).write.mode("overwrite").parquet(splitdir)
 
     W = adaptive_centroids(_MK_DIM, nlist_for(src.count()))

@@ -138,7 +138,7 @@ def test_tag_dictionary_dispatch_regimes(spark, sf_dir):
     assert as_rows(jvm) == as_rows(arrow)
 
 
-def test_q394_append_sessions_are_split_independent(spark, sf_dir):
+def test_q394_append_sessions_are_split_independent(spark, sf_dir, tmp_path):
     """Force 3 micro-batches (contiguous time slices, mtime-pinned replay
     order: each batch only ADVANCES the watermark, so nothing is
     late-dropped) -- the appended session set must equal the registered
@@ -147,7 +147,6 @@ def test_q394_append_sessions_are_split_independent(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -177,8 +176,8 @@ def test_q394_append_sessions_are_split_independent(spark, sf_dir):
         ),
         src.filter(F.col("ts").cast("double") >= t2),
     ]
-    workdir = tempfile.mkdtemp(prefix="ssq-394-parts-")
-    stage = tempfile.mkdtemp(prefix="ssq-394-stage-")
+    workdir, stage = str(tmp_path / "parts"), str(tmp_path / "stage")
+    os.mkdir(stage)
     now = time.time()
     for i, part in enumerate(slices):
         part.coalesce(1).write.parquet(os.path.join(workdir, f"p{i}"))
@@ -213,7 +212,6 @@ def test_q394_append_sessions_are_split_independent(spark, sf_dir):
         for r in q394_stream_session_append(spark, sf_dir).collect()
     }
     assert got == want
-    shutil.rmtree(workdir, ignore_errors=True)
 
 
 def test_panel_topk_arrow_equals_jvm_topk(spark, sf_dir):

@@ -15,7 +15,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
 from datetime import datetime
 
@@ -28,11 +27,12 @@ from sparkstreaming_quickstart_spark.streaming.pipeline import run_to_memory
 
 def _stage_events(spark, rows, stage, n_files=1, mtimes=None):
     """Write events-shaped rows as n_files parquet files with pinned mtimes
-    (replay order) into `stage`; returns the stream schema used."""
+    (replay order) into `stage`, through a `<stage>-work` sibling dir;
+    returns the stream schema used."""
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     )
-    workdir = tempfile.mkdtemp(prefix="ssq-397-work-")
+    workdir = f"{stage}-work"
     now = time.time()
     for i, part in enumerate(df.randomSplit([1.0] * n_files, seed=7) if n_files > 1 else [df]):
         part.coalesce(1).write.mode("overwrite").parquet(os.path.join(workdir, f"p{i}"))
@@ -41,7 +41,6 @@ def _stage_events(spark, rows, stage, n_files=1, mtimes=None):
         shutil.copy(f, tgt)
         t = (mtimes[i] if mtimes else now - 300 + i * 100)
         os.utime(tgt, (t, t))
-    shutil.rmtree(workdir, ignore_errors=True)
     return df.schema
 
 
@@ -49,7 +48,7 @@ def _ts(s: str):
     return datetime.fromisoformat(s)
 
 
-def test_q397_emission_lags_by_join_delay(spark):
+def test_q397_emission_lags_by_join_delay(spark, tmp_path):
     """Hand-built boundary corpus: global watermark = 10:00 - 2h = 08:00;
     join-output watermark = 08:00 - 1h - 1ms = 06:59:59.999.  One matched
     pair per hour window [04:00..08:00): ends 05:00 and 06:00 emit, ends
@@ -74,7 +73,8 @@ def test_q397_emission_lags_by_join_delay(spark):
         (9, _ts("2024-01-01 10:00:00"), 9, "click", 8.0, "{}"),
         (10, _ts("2024-01-01 10:00:00"), 9, "error", 0.0, "{}"),
     ]
-    stage = tempfile.mkdtemp(prefix="ssq-397-boundary-")
+    stage = str(tmp_path / "stage")
+    os.mkdir(stage)
     schema = _stage_events(spark, rows, stage)
     agg = _q397_agg(lambda: spark.readStream.schema(schema).parquet(stage))
     table = run_to_memory(agg, output_mode="append")
@@ -101,10 +101,9 @@ def test_q397_emission_lags_by_join_delay(spark):
         (r[0], r[1], r[2]) for r in con.execute(_Q397_ORACLE).fetchall()
     }
     assert got == want, (got, want)
-    shutil.rmtree(stage, ignore_errors=True)
 
 
-def test_q397_join_window_split_independent(spark, sf_dir):
+def test_q397_join_window_split_independent(spark, sf_dir, tmp_path):
     """Force 3 micro-batches (contiguous time slices, mtime-pinned replay
     order) -- because the slices are time-contiguous, a window's error may
     arrive a batch AFTER its matching click, so the joined row enters the
@@ -133,8 +132,8 @@ def test_q397_join_window_split_independent(spark, sf_dir):
         ),
         src.filter(F.col("ts").cast("double") >= t2),
     ]
-    workdir = tempfile.mkdtemp(prefix="ssq-397-parts-")
-    stage = tempfile.mkdtemp(prefix="ssq-397-stage-")
+    workdir, stage = str(tmp_path / "parts"), str(tmp_path / "stage")
+    os.mkdir(stage)
     now = time.time()
     for i, part in enumerate(slices):
         part.coalesce(1).write.parquet(os.path.join(workdir, f"p{i}"))
@@ -158,5 +157,3 @@ def test_q397_join_window_split_independent(spark, sf_dir):
         for r in q397_stream_join_window_rollup(spark, sf_dir).collect()
     }
     assert got == want and want, (len(got), len(want))
-    shutil.rmtree(workdir, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)

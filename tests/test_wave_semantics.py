@@ -12,13 +12,12 @@ design correct at scale, exercised beyond the oracle value-match.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
 
 
-def test_dedup_within_watermark_ttl_reemits(spark):
+def test_dedup_within_watermark_ttl_reemits(spark, tmp_path):
     """Key K at t0, a duplicate at t0+5h (dropped, and it EXTENDS K's state
     expiry to t0+7h -- duplicates refresh the TTL, probed), an unrelated key
     at t0+10h that advances the watermark past that expiry (the watermark
@@ -26,7 +25,7 @@ def test_dedup_within_watermark_ttl_reemits(spark):
     K again at t0+12h: with K's state evicted, the last copy RE-EMITS.
     Plain dropDuplicates would emit K once, ever; the TTL variant emits it
     twice -- the bounded-state tradeoff that is the operator's point."""
-    root = tempfile.mkdtemp(prefix="ssq-ttl-")
+    root = str(tmp_path)
     src = os.path.join(root, "src")
     os.makedirs(src)
     t0 = "2024-01-01 00:00:00"
@@ -131,13 +130,13 @@ def test_cms_estimate_dominates_exact(spark, sf_dir):
     assert all(r.overcount == r.cms_est - r.exact_n for r in rows)
 
 
-def test_foreachbatch_upsert_retry_is_noop(spark):
+def test_foreachbatch_upsert_retry_is_noop(spark, tmp_path):
     """Replaying a batch id through q177's merge must not change the state
     table -- the ledger is what turns at-least-once delivery into
     exactly-once results."""
     from sparkstreaming_quickstart_spark.queries.wave6 import make_upsert
 
-    root = tempfile.mkdtemp(prefix="ssq-upsert-test-")
+    root = str(tmp_path)
     upsert = make_upsert(root)
     b0 = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00", 10, "click"), (1, "2024-01-01 01:00:00", 11, "error")],
