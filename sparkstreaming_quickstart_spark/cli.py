@@ -7,6 +7,13 @@ Processor.java:124-126), --registry, --earliest, --checkpoint-folder,
 --batch-period, --source-topic -- plus --replay-dir to run the pipeline off
 the file-replay source when no broker exists (the driver/test environment).
 
+The Kafka path resolves writer schemas as the reference's
+KafkaAvroDeserializer does (Processor.java:128-130): each topic's value
+subject `<topic>-value` (Confluent's TopicNameStrategy) is read from
+--registry once, when the query is built, and its newest version is the
+reader schema.  Both paths print the same two columns, `key` and a JSON
+`value`.
+
 Fixes inherited reference bugs by construction (SURVEY.md section 7 risks):
 the checkpoint always has the sink attached (per-query checkpointLocation),
 batch-period is honored on every code path, and a missing --earliest simply
@@ -16,11 +23,14 @@ defaults instead of NPE-ing (Processor.java:77).
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 from pyspark.sql import functions as F
 
 from .session import get_spark
+from .streaming.avro_wire import decode_confluent_avro, reader_struct
+from .streaming.schema_registry import fetch_subject_schemas
 from .streaming.source import events_stream, kafka_stream
 
 
@@ -31,12 +41,11 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--name", default="sparkstreaming-quickstart-spark")
     p.add_argument("--zookeeper", help="Kafka bootstrap servers (reference arg name kept for parity)")
-    p.add_argument("--registry", help="Schema-registry URL (Confluent wire format assumed when set)")
+    p.add_argument("--registry", help="Schema-registry URL (required with --zookeeper)")
     p.add_argument("--earliest", action="store_true", help="start from earliest offsets")
     p.add_argument("--checkpoint-folder", default=None)
     p.add_argument("--batch-period", type=int, default=1000, help="micro-batch trigger in ms")
     p.add_argument("--source-topic", action="append", default=[], help="repeatable")
-    p.add_argument("--avro-schema", default=None, help="reader Avro schema JSON (value decode)")
     p.add_argument(
         "--replay-dir",
         default=None,
@@ -88,21 +97,31 @@ def main(argv: list[str] | None = None) -> int:
         df.show(args.limit, truncate=False)
         return 0
     if args.replay_dir:
-        stream = events_stream(spark, args.replay_dir).select(
-            F.col("event_id").cast("string").alias("key"),
-            F.to_json(F.struct("ts", "user_id", "event_type", "value")).alias("value"),
-        )
+        src, key = events_stream(spark, args.replay_dir), "event_id"
+        fields = ["ts", "user_id", "event_type", "value"]
     else:
-        if not args.zookeeper or not args.source_topic:
-            raise SystemExit("--zookeeper and --source-topic required without --replay-dir")
-        stream = kafka_stream(
+        if not (args.zookeeper and args.source_topic and args.registry):
+            raise SystemExit("--zookeeper, --source-topic and --registry required without --replay-dir")
+        schema_map, newest = {}, {}
+        for topic in args.source_topic:
+            versions = fetch_subject_schemas(args.registry, f"{topic}-value")
+            schema_map.update(versions)  # ids are global within a registry
+            newest[topic] = json.loads(list(versions.values())[-1])
+        first = newest[args.source_topic[0]]
+        if any(s != first for s in newest.values()):
+            raise SystemExit(f"topics {sorted(newest)} have different newest value schemas")
+        reader = reader_struct(first)
+        kafka = kafka_stream(
             spark,
             bootstrap_servers=args.zookeeper,
             topics=args.source_topic,
-            avro_schema_json=args.avro_schema,
             starting_offsets="earliest" if args.earliest else "latest",
-            confluent_wire_format=args.registry is not None,
         )
+        src, key = decode_confluent_avro(kafka.select("key", "value"), reader, schema_map), "key"
+        fields = reader.fieldNames()
+    stream = src.select(
+        F.col(key).cast("string").alias("key"), F.to_json(F.struct(*fields)).alias("value")
+    )
     # Reference sink semantics (A3): print key/value per record.  Checkpoints
     # are opt-in as in the reference: without --checkpoint-folder the console
     # sink runs on Spark's temporary checkpoint and starts afresh every run.

@@ -1,11 +1,9 @@
-"""Confluent-Avro wire decode without the spark-avro connector.
+"""Confluent-Avro wire decode, the package's one Avro decode route.
 
 The reference's ingest resolves the *writer* schema per record from the
 Confluent wire header (magic byte 0 + big-endian 4-byte schema id) via its
-deserializer (Processor.java:51,128-130), then exposes GenericRecords.  The
-spark-avro `from_avro` path (streaming/source.py) needs a jar this container
-does not ship AND pins a single reader schema, so this module provides the
-jar-free equivalent:
+deserializer (Processor.java:51,128-130), then exposes GenericRecords.  This
+module does the same without the spark-avro connector:
 
   * a minimal, spec-complete-for-records Avro *binary* codec in pure Python
     (varint/zigzag ints, IEEE float/double, length-prefixed bytes/string,
@@ -18,15 +16,9 @@ jar-free equivalent:
     name-matching core;
   * `decode_confluent_avro`, a mapInPandas operator that applies the above
     to any batch or streaming DataFrame with a binary `value` column, one
-    record at a time in the Python worker.  Python-side decode is the
-    honest fallback: it is the slow path relative to the JVM connector,
-    and the operator composes with every downstream DataFrame
-    transformation unchanged.  The Kafka route composes it onto the source:
-    `decode_confluent_avro(kafka_stream(...), reader, fetch_schema_map(...))`.
-
-When the spark-avro jar IS present and the topic has a single schema,
-prefer `kafka_stream(avro_schema_json=...)` (JVM decode); this module is
-the multi-schema / jar-free route.
+    record at a time in the Python worker.  The Kafka route composes it
+    onto the source: `decode_confluent_avro(kafka_stream(...),
+    reader_struct(newest), fetch_subject_schemas(...))`.
 """
 
 from __future__ import annotations
@@ -36,7 +28,17 @@ import struct
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 MAGIC = 0
 
@@ -208,15 +210,16 @@ def wire_encode(schema_id: int, value: Any, schema: Any) -> bytes:
 
 def wire_decode(buf: bytes, schema_map: dict[int, Any]) -> tuple[int, Any]:
     """Resolve the writer schema from the wire header, decode the body.
-    Malformed input (short header, bad magic byte, truncated body, an index
-    outside the schema) raises ValueError naming the cause."""
+    Malformed input (short header, bad magic byte, unknown schema id,
+    truncated body, an index outside the schema) raises ValueError naming
+    the cause."""
     if len(buf) < 5:
         raise ValueError(f"not Confluent wire format ({len(buf)} bytes, shorter than the 5-byte header)")
     if buf[0] != MAGIC:
         raise ValueError("not Confluent wire format (bad magic byte)")
     schema_id = int.from_bytes(buf[1:5], "big")
     if schema_id not in schema_map:
-        raise KeyError(f"schema id {schema_id} not in resolved registry map")
+        raise ValueError(f"schema id {schema_id} not in the resolved registry map (ids {sorted(schema_map)})")
     value, _ = decode(buf, schema_map[schema_id], 5)
     return schema_id, value
 
@@ -224,6 +227,39 @@ def wire_decode(buf: bytes, schema_map: dict[int, Any]) -> tuple[int, Any]:
 # ---------------------------------------------------------------------------
 # DataFrame operator
 # ---------------------------------------------------------------------------
+
+_READER_TYPES = {
+    "boolean": BooleanType(),
+    "int": IntegerType(),
+    "long": LongType(),
+    "float": FloatType(),
+    "double": DoubleType(),
+    "string": StringType(),
+    "bytes": BinaryType(),
+}
+
+
+def reader_struct(schema_json: Any) -> StructType:
+    """The reader `StructType` for an Avro record schema: one column per
+    field.  Primitives map to their Spark type, a `["null", T]` union to T
+    and an enum to a string; any other field type raises a ValueError
+    naming the field.  Every column is nullable, since
+    `decode_confluent_avro` projects a field that an older writer lacks to
+    null."""
+    record = _norm(schema_json)
+    if not isinstance(record, dict) or record.get("type") != "record":
+        raise ValueError(f"reader schema is not an Avro record: {schema_json!r}")
+    fields = []
+    for f in record["fields"]:
+        t = _norm(f["type"])
+        if isinstance(t, list) and len(t) == 2 and "null" in t:
+            t = _norm(t[1 - t.index("null")])
+        if isinstance(t, dict) and t.get("type") == "enum":
+            t = "string"
+        if not isinstance(t, str) or t not in _READER_TYPES:
+            raise ValueError(f"field {f['name']!r}: no reader column for Avro type {f['type']!r}")
+        fields.append(StructField(f["name"], _READER_TYPES[t]))
+    return StructType(fields)
 
 
 def decode_confluent_avro(

@@ -1,34 +1,24 @@
-"""Confluent Schema Registry resolver (round-9, closes the last A2 delta).
+"""Confluent Schema Registry resolver.
 
 The reference resolves writer schemas at runtime from `schema.registry.url`
-(Processor.java:128-130: KafkaAvroDeserializer + CachedSchemaRegistryClient);
-this repo's per-record decode path (`streaming/avro_wire.py`) is complete but
-required the caller to pre-dump a `{schema_id: schema_json}` map.  This
-module closes that gap: resolve ids against a live registry over its public
-REST surface (`GET /schemas/ids/{id}` -> `{"schema": "..."}`), stdlib-HTTP
-only, with the transport injectable so the resolution logic is fully
-testable in a network-less container.
+(Processor.java:128-130: KafkaAvroDeserializer + CachedSchemaRegistryClient).
+Here the resolution happens once, on the driver, when the query is built
+(SURVEY.md 1.2): `fetch_subject_schemas` reads every version of a subject
+over the registry's public REST surface, and the resulting
+`{schema_id: schema_json}` map ships in `decode_confluent_avro`'s closure,
+so executors never talk to the registry.  Schema ids are immutable, so the
+map never goes stale; a record whose id is not in it (a version registered
+after the query started) fails `wire_decode` with a ValueError naming the
+id.
 
-Design notes:
-- The transport is a plain `http_get(url) -> str` callable.  Production uses
-  `urllib.request` (stdlib -- no new dependency); tests inject a fake.  This
-  is the seam the reference hides inside CachedSchemaRegistryClient.
-- Resolution happens ONCE at query build on the driver (SURVEY.md 1.2): the
-  resolved map is a plain dict shipped in the decode kernel's closure, so
-  executors never talk to the registry -- at 1000 executors a per-task
-  registry fetch would be a thundering herd; one driver-side fetch is the
-  scale-correct shape (and matches the reference's client-side cache
-  semantics: schema ids are immutable, so a resolved map never goes stale).
-- Unknown ids at decode time still raise the explicit KeyError from
-  `wire_decode` -- the same failure surface as before; callers who expect
-  schema evolution mid-stream should resolve the superset of ids up front
-  (ids are assigned monotonically by the registry).
+The transport is a plain `http_get(url) -> str` callable: `urllib.request`
+in production (stdlib, no new dependency), a fake in tests.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from urllib.request import urlopen
 
 
@@ -37,57 +27,27 @@ def _stdlib_http_get(url: str) -> str:
         return resp.read().decode("utf-8")
 
 
-def fetch_schema_by_id(
-    registry_url: str,
-    schema_id: int,
-    http_get: Callable[[str], str] = _stdlib_http_get,
-) -> str:
-    """Resolve one schema id to its Avro schema JSON string.
-
-    Mirrors the registry REST contract: `GET {base}/schemas/ids/{id}`
-    returns `{"schema": "<json-escaped avro schema>"}`.
-    """
-    base = registry_url.rstrip("/")
-    payload = json.loads(http_get(f"{base}/schemas/ids/{schema_id}"))
-    if "schema" not in payload:
-        raise ValueError(
-            f"registry response for schema id {schema_id} has no 'schema' key: "
-            f"{payload!r}"
-        )
-    return payload["schema"]
-
-
-def fetch_schema_map(
-    registry_url: str,
-    schema_ids: Iterable[int],
-    http_get: Callable[[str], str] = _stdlib_http_get,
-) -> dict[int, str]:
-    """Resolve ids -> Avro schema JSON, deduplicated, driver-side.
-
-    The returned dict is `decode_confluent_avro`'s `schema_map` unchanged.
-    """
-    return {
-        sid: fetch_schema_by_id(registry_url, sid, http_get)
-        for sid in sorted(set(schema_ids))
-    }
-
-
-def fetch_latest_schema(
+def fetch_subject_schemas(
     registry_url: str,
     subject: str,
     http_get: Callable[[str], str] = _stdlib_http_get,
-) -> tuple[int, str]:
-    """Resolve a subject's latest version to (schema_id, schema_json).
+) -> dict[int, str]:
+    """Resolve every version of `subject` to `{schema_id: schema_json}`.
 
-    `GET {base}/subjects/{subject}/versions/latest` -> the common
-    bootstrap when a caller knows the topic (subject `<topic>-value`) but
-    not the current id set.
+    `GET {base}/subjects/{subject}/versions` lists the version numbers;
+    `GET {base}/subjects/{subject}/versions/{v}` returns each one's `id` and
+    `schema`.  Entries are in version order, so the last one is the
+    subject's newest schema.  The dict is `decode_confluent_avro`'s
+    `schema_map` unchanged.
     """
-    base = registry_url.rstrip("/")
-    payload = json.loads(http_get(f"{base}/subjects/{subject}/versions/latest"))
-    if "id" not in payload or "schema" not in payload:
-        raise ValueError(
-            f"registry response for subject {subject!r} missing id/schema: "
-            f"{payload!r}"
-        )
-    return int(payload["id"]), payload["schema"]
+    base = f"{registry_url.rstrip('/')}/subjects/{subject}/versions"
+    out: dict[int, str] = {}
+    for version in sorted(json.loads(http_get(base))):
+        payload = json.loads(http_get(f"{base}/{version}"))
+        if "id" not in payload or "schema" not in payload:
+            raise ValueError(
+                f"registry response for subject {subject!r} version {version} "
+                f"missing id/schema: {payload!r}"
+            )
+        out[int(payload["id"])] = payload["schema"]
+    return out

@@ -1,16 +1,13 @@
 """Streaming sources.
 
 Production path mirrors the reference's Kafka ingest (A1,
-Processor.java:118-139): `kafka_stream` reads `readStream.format("kafka")`
-and, with a pinned reader schema, decodes the value through spark-avro's
-`from_avro`, after stripping the Confluent wire-format header (magic byte +
-4-byte schema id) that `from_avro` does not understand.  Per-record
-writer-schema decode is its own operator, composed by the caller:
-`decode_confluent_avro(kafka_stream(...), reader, fetch_schema_map(...))`
-(streaming/avro_wire.py, streaming/schema_registry.py).  Offsets/group
-management move into the checkpoint WAL, superseding the reference's
-`enable.auto.commit=false` + never-implemented manual commit
-(Processor.java:132-135).
+Processor.java:118-139): `kafka_stream` only reads
+`readStream.format("kafka")`.  Per-record writer-schema decode is its own
+operator, composed by the caller: `decode_confluent_avro(kafka_stream(...),
+reader, fetch_subject_schemas(...))` (streaming/avro_wire.py,
+streaming/schema_registry.py).  Offsets/group management move into the
+checkpoint WAL, superseding the reference's `enable.auto.commit=false` +
+never-implemented manual commit (Processor.java:132-135).
 
 Test/driver path: `table_stream` replays `<sf_dir>/<table>.parquet` in place
 through the file stream source -- same unbounded-DataFrame surface, no broker
@@ -19,7 +16,7 @@ and no copy needed -- with the schema Spark itself reads from the file.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
@@ -56,77 +53,23 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def strip_confluent_header(value: Column | str) -> Column:
-    """Drop the Confluent wire-format prefix from an Avro message value.
-
-    The reference's KafkaAvroDeserializer resolves the writer schema from a
-    5-byte prefix -- magic byte 0 + big-endian 4-byte schema id
-    (Processor.java:51, registry lookup); Spark's `from_avro` expects a bare
-    Avro body under a pinned reader schema, so the prefix must go.
-    """
-    col = F.col(value) if isinstance(value, str) else value
-    return F.substr(col, F.lit(6), F.length(col) - F.lit(5))
-
-
-def _require_avro(spark: SparkSession) -> None:
-    """Fail fast with guidance if the spark-avro connector is absent.
-
-    The Python wrapper always imports; the jar-missing failure otherwise
-    surfaces only at analysis time as AVRO_NOT_LOADED -- probe analysis
-    eagerly so callers get one clear error at build time.
-    """
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        probe = spark.range(1).select(from_avro(F.lit(bytes([0])), '"bytes"'))
-        probe._jdf.queryExecution().analyzed()
-    except Exception as exc:
-        raise NotImplementedError(
-            "spark-avro connector required for Avro decode: submit with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark version>"
-        ) from exc
-
-
 def kafka_stream(
     spark: SparkSession,
     bootstrap_servers: str,
     topics: list[str],
-    avro_schema_json: str | None = None,
     starting_offsets: str = "earliest",
-    confluent_wire_format: bool = True,
 ) -> DataFrame:
-    """Kafka source, with an optional pinned-schema Avro value decode.
-
-    Reference parity (Processor.java:124-138): subscribe to topics, string
-    key, Avro GenericRecord value, earliest/latest start.  The Kafka source
-    itself requires the spark-sql-kafka package on the classpath; raises a
-    clear error otherwise (it does not ship in this container).
-
-    With `avro_schema_json`, the value decodes to a `record` column through
-    the spark-avro connector's `from_avro` (JVM decode; jar required), after
-    stripping the Confluent header when `confluent_wire_format`.  Without it
-    the binary `value` passes through, for `decode_confluent_avro`.
-    """
-    df = (
+    """Kafka source (Processor.java:124-138): subscribe to topics from the
+    earliest or latest offsets.  Returns the source's own columns (binary
+    `key` and `value`, `topic`, `partition`, `offset`, `timestamp`,
+    `timestampType`); the caller decodes `value` with
+    `decode_confluent_avro`.  Needs the spark-sql-kafka package on the
+    classpath (it does not ship with pyspark): without it `load()` fails
+    with "Failed to find data source: kafka"."""
+    return (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", ",".join(topics))
         .option("startingOffsets", starting_offsets)
         .load()
     )
-    out = df.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
-    if avro_schema_json is not None:
-        _require_avro(spark)
-        from pyspark.sql.avro.functions import from_avro
-
-        payload = strip_confluent_header("value") if confluent_wire_format else F.col("value")
-        out = out.withColumn("record", from_avro(payload, avro_schema_json))
-    return out
-

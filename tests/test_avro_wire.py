@@ -1,20 +1,13 @@
-"""Confluent Avro wire-format handling (SURVEY.md A2).
-
-The spark-avro connector jar is absent in this container, so `from_avro`
-itself stays gated (`_require_avro` raises with submit guidance); what IS
-testable everywhere is our contribution: the 5-byte header strip, verified
-byte-for-byte against a hand-encoded message carrying the reference's own
-test record {name: "Gilberto", age: 59} (ProcessorTest.java:74-77).
+"""Confluent Avro wire-format handling (SURVEY.md A2): the pure-Python
+codec, checked byte-for-byte against a hand-encoded message carrying the
+reference's own test record {name: "Gilberto", age: 59}
+(ProcessorTest.java:74-77), per-id decode, registry resolution and the
+reader schema derived from an Avro record.
 """
 
 from __future__ import annotations
 
 import pytest
-
-from sparkstreaming_quickstart_spark.streaming.source import (
-    _require_avro,
-    strip_confluent_header,
-)
 
 
 def _zigzag(n: int) -> bytes:
@@ -35,20 +28,6 @@ def _avro_body() -> bytes:
     # record testschema {name: string, age: ["int","null"]} = {"Gilberto", 59}
     name = b"Gilberto"
     return _zigzag(len(name)) + name + _zigzag(0) + _zigzag(59)
-
-
-def test_strip_confluent_header_recovers_avro_body(spark):
-    body = _avro_body()
-    wire = bytes([0]) + (1).to_bytes(4, "big") + body  # magic 0 + schema id 1
-    df = spark.createDataFrame([(wire,), (bytes([0, 0, 0, 0, 2]),)], "value binary")
-    out = [bytes(r.payload) for r in df.select(strip_confluent_header("value").alias("payload")).collect()]
-    assert out[0] == body
-    assert out[1] == b""  # header-only message -> empty body, no slice error
-    # decode the stripped body by hand: proves it is the exact Avro payload
-    ln = out[0][0] >> 1
-    assert out[0][1 : 1 + ln] == b"Gilberto"
-    assert out[0][1 + ln] == 0  # union branch 0 (int)
-    assert out[0][2 + ln] >> 1 == 59
 
 
 def test_pure_python_codec_matches_hand_encoding():
@@ -166,55 +145,31 @@ def test_streaming_wire_decode_end_to_end(spark, tmp_path):
     assert len(os.listdir(d)) > 0
 
 
-def test_from_avro_gate_gives_actionable_error(spark):
-    # With the connector jar absent the failure must be a NotImplementedError
-    # naming the package to add -- not a deferred analysis exception.
-    try:
-        from pyspark.sql.avro.functions import from_avro  # noqa: F401
-
-        probe_ok = True
-        try:
-            _require_avro(spark)
-        except NotImplementedError as exc:
-            probe_ok = False
-            assert "spark-avro" in str(exc)
-        if probe_ok:
-            pytest.skip("spark-avro connector present; gate not exercised")
-    except ImportError:
-        pytest.skip("pyspark avro wrapper missing entirely")
-
-
 def test_schema_registry_fetcher_resolves_ids_end_to_end(spark):
-    """Round-9 A2 closure: an injectable registry fetcher resolves TWO
-    schema ids over the REST contract (GET /schemas/ids/{id}) and the
+    """`fetch_subject_schemas` resolves both versions of a subject over the
+    REST contract (GET /subjects/{s}/versions, then each version) and the
     resolved map drives decode_confluent_avro end-to-end -- the
     reference's schema.registry.url behavior (Processor.java:128-130)
     minus only the live socket, which the injected transport replaces."""
     import json as _json
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from sparkstreaming_quickstart_spark.streaming.avro_wire import (
         decode_confluent_avro,
+        reader_struct,
         wire_encode,
     )
-    from sparkstreaming_quickstart_spark.streaming.schema_registry import (
-        fetch_latest_schema,
-        fetch_schema_map,
-    )
+    from sparkstreaming_quickstart_spark.streaming.schema_registry import fetch_subject_schemas
 
     v1 = {"type": "record", "name": "user", "fields": [
         {"name": "name", "type": "string"}, {"name": "age", "type": "long"}]}
     v2 = {"type": "record", "name": "user", "fields": [
         {"name": "name", "type": "string"}, {"name": "age", "type": "long"},
         {"name": "email", "type": ["null", "string"]}]}
+    base = "http://registry:8081/subjects/users-value/versions"
     served = {
-        "http://registry:8081/schemas/ids/7": {"schema": _json.dumps(v1)},
-        "http://registry:8081/schemas/ids/9": {"schema": _json.dumps(v2)},
-        "http://registry:8081/subjects/users-value/versions/latest": {
-            "subject": "users-value", "version": 2, "id": 9,
-            "schema": _json.dumps(v2),
-        },
+        base: [2, 1],
+        f"{base}/1": {"subject": "users-value", "version": 1, "id": 7, "schema": _json.dumps(v1)},
+        f"{base}/2": {"subject": "users-value", "version": 2, "id": 9, "schema": _json.dumps(v2)},
     }
     calls: list[str] = []
 
@@ -222,31 +177,58 @@ def test_schema_registry_fetcher_resolves_ids_end_to_end(spark):
         calls.append(url)
         return _json.dumps(served[url])
 
-    smap = fetch_schema_map("http://registry:8081/", [9, 7, 9], fake_http_get)
-    assert set(smap) == {7, 9}
-    # duplicate id resolved once; trailing slash normalized
-    assert calls == [
-        "http://registry:8081/schemas/ids/7",
-        "http://registry:8081/schemas/ids/9",
-    ]
-    sid, latest = fetch_latest_schema(
-        "http://registry:8081", "users-value", fake_http_get
-    )
-    assert sid == 9 and _json.loads(latest) == v2
+    smap = fetch_subject_schemas("http://registry:8081/", "users-value", fake_http_get)
+    # version order, newest last; trailing slash normalized
+    assert list(smap) == [7, 9] and _json.loads(smap[9]) == v2
+    assert calls == [base, f"{base}/1", f"{base}/2"]
+
+    served[f"{base}/2"] = {"subject": "users-value", "version": 2}
+    with pytest.raises(ValueError, match="'users-value' version 2 missing id/schema"):
+        fetch_subject_schemas("http://registry:8081", "users-value", fake_http_get)
 
     msgs = [
         (1, wire_encode(7, {"name": "ada", "age": 36}, v1)),
         (2, wire_encode(9, {"name": "grace", "age": 45, "email": "g@x.io"}, v2)),
     ]
     df = spark.createDataFrame(msgs, "k long, value binary")
-    reader = StructType([
-        StructField("name", StringType()),
-        StructField("age", LongType()),
-        StructField("email", StringType()),
-    ])
-    out = {r.k: r for r in decode_confluent_avro(df, reader, smap).collect()}
+    out = {r.k: r for r in decode_confluent_avro(df, reader_struct(smap[9]), smap).collect()}
     assert (out[1].name, out[1].age, out[1].email, out[1].schema_id) == ("ada", 36, None, 7)
     assert (out[2].name, out[2].age, out[2].email, out[2].schema_id) == ("grace", 45, "g@x.io", 9)
+
+
+@pytest.mark.parametrize(
+    "avro_type, expected",
+    [
+        ("boolean", "boolean"),
+        ("int", "int"),
+        ("long", "bigint"),
+        ("float", "float"),
+        ("double", "double"),
+        ({"type": "string"}, "string"),
+        ("bytes", "binary"),
+        (["int", "null"], "int"),  # the reference's `age` field
+        (["null", "string"], "string"),
+        ({"type": "enum", "name": "col", "symbols": ["red", "green"]}, "string"),
+        (["null", {"type": "enum", "name": "col", "symbols": ["red"]}], "string"),
+        ({"type": "record", "name": "inner", "fields": [{"name": "x", "type": "int"}]}, None),
+        ({"type": "array", "items": "long"}, None),
+        (["null", "int", "string"], None),
+    ],
+)
+def test_reader_struct_maps_field_types(avro_type, expected):
+    import json as _json
+
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import reader_struct
+
+    record = {"type": "record", "name": "r", "fields": [
+        {"name": "name", "type": "string"}, {"name": "f", "type": avro_type}]}
+    if expected is None:
+        with pytest.raises(ValueError, match="field 'f'"):
+            reader_struct(_json.dumps(record))
+        return
+    struct = reader_struct(_json.dumps(record))
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in struct.fields] == [
+        ("name", "string", True), ("f", expected, True)]
 
 
 # Malformed wire input is rejected with a ValueError naming the cause, never
@@ -281,6 +263,14 @@ def test_wire_decode_rejects_message_shorter_than_header():
     for short in (b"", b"\x00", b"\x00\x00", b"\x00\x00\x00\x00"):
         with pytest.raises(ValueError, match="5-byte header"):
             wire_decode(short, {0: "string"})
+
+
+def test_wire_decode_rejects_unknown_schema_id():
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import wire_decode, wire_encode
+
+    msg = wire_encode(5, "x", "string")
+    with pytest.raises(ValueError, match=r"schema id 5 not in .*\(ids \[1, 3\]\)"):
+        wire_decode(msg, {3: "string", 1: "string"})
 
 
 def test_wire_decode_rejects_body_cut_mid_record():

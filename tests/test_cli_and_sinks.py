@@ -81,15 +81,107 @@ def test_cli_query_mode_runs_registered_query(sf_dir):
 
 
 def test_cli_requires_kafka_args():
-    out = subprocess.run(
-        [sys.executable, "-m", "sparkstreaming_quickstart_spark"],
-        cwd="/root/repo",
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
+    # no source at all, and the Kafka path without --registry
+    for extra in ([], ["--zookeeper", "localhost:9092", "--source-topic", "users"]):
+        out = subprocess.run(
+            [sys.executable, "-m", "sparkstreaming_quickstart_spark", *extra],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert out.returncode != 0
+        assert "--zookeeper" in out.stderr and "--registry" in out.stderr
+
+
+# Runs cli.main with the Kafka source swapped for a file stream of
+# Kafka-shaped rows and the registry's HTTP transport swapped for a dict of
+# canned responses, so the real resolver, reader schema and decode run.
+_KAFKA_CLI_CHILD = """
+import io, json, sys
+from sparkstreaming_quickstart_spark import cli
+from sparkstreaming_quickstart_spark.streaming import schema_registry
+
+src_dir, served_path, *argv = sys.argv[1:]
+with open(served_path) as fh:
+    served = json.load(fh)
+schema_registry.urlopen = lambda url, timeout: io.BytesIO(json.dumps(served[url]).encode())
+cli.kafka_stream = lambda spark, bootstrap_servers, topics, starting_offsets: (
+    spark.readStream.schema(
+        "key binary, value binary, topic string, partition int, offset long, "
+        "timestamp timestamp, timestampType int"
+    ).parquet(src_dir)
+)
+sys.exit(cli.main(argv))
+"""
+
+
+def test_cli_kafka_path_decodes_every_schema_version(spark, tmp_path):
+    """The reference's main() Kafka path: --registry resolves the topic's
+    value subject, and records written under two schema versions print as
+    `key` + JSON `value` through the console sink."""
+    import datetime
+    import json
+    import re
+
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import wire_encode
+
+    v1 = {"type": "record", "name": "testschema", "fields": [
+        {"name": "name", "type": "string"}, {"name": "age", "type": ["int", "null"]}]}
+    v2 = {"type": "record", "name": "testschema", "fields": [
+        {"name": "name", "type": "string"}, {"name": "age", "type": ["int", "null"]},
+        {"name": "email", "type": ["null", "string"]}]}
+    records = [
+        (b"k1", wire_encode(1, {"name": "Gilberto", "age": 59}, v1)),
+        (b"k2", wire_encode(2, {"name": "Grace", "age": 45, "email": "g@x.io"}, v2)),
+        (b"k3", wire_encode(1, {"name": "Alan", "age": None}, v1)),
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    src_dir = str(tmp_path / "kafka")
+    spark.createDataFrame(
+        [(k, v, "users", 0, i, ts, 0) for i, (k, v) in enumerate(records)],
+        "key binary, value binary, topic string, partition int, offset long, "
+        "timestamp timestamp, timestampType int",
+    ).coalesce(1).write.parquet(src_dir)
+
+    def subject(name, *versions):
+        base = f"http://registry:8081/subjects/{name}-value/versions"
+        served = {base: [v for v, _, _ in versions]}
+        for v, sid, schema in versions:
+            served[f"{base}/{v}"] = {"subject": f"{name}-value", "version": v, "id": sid,
+                                     "schema": json.dumps(schema)}
+        return served
+
+    served_path = tmp_path / "served.json"
+    served_path.write_text(json.dumps({**subject("users", (1, 1, v1), (2, 2, v2)),
+                                       **subject("legacy", (1, 1, v1))}))
+
+    def run(*topics):
+        argv = ["--zookeeper", "localhost:9092", "--registry", "http://registry:8081",
+                "--earliest", "--drain"]
+        for t in topics:
+            argv += ["--source-topic", t]
+        return subprocess.run(
+            [sys.executable, "-c", _KAFKA_CLI_CHILD, src_dir, str(served_path), *argv],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+
+    out = run("users")
+    assert out.returncode == 0, out.stderr[-2000:]
+    for key, value in [
+        ("k1", '{"name":"Gilberto","age":59}'),
+        ("k2", '{"name":"Grace","age":45,"email":"g@x.io"}'),
+        ("k3", '{"name":"Alan"}'),
+    ]:
+        assert re.search(rf"\|{key}\s*\|{re.escape(value)}\s*\|", out.stdout), out.stdout
+    # topics whose newest value schemas differ are refused, not merged
+    out = run("users", "legacy")
     assert out.returncode != 0
-    assert "--zookeeper" in out.stderr
+    assert "['legacy', 'users'] have different newest value schemas" in out.stderr
 
 
 def test_streaming_parquet_sink(spark, sf_dir, tmp_path):
