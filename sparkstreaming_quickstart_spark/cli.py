@@ -76,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
             tag = " [ground-truth]" if q.scale_class == "ground-truth" else ""
             print(f"{name}{tag}\t{(q.doc or '').strip().splitlines()[0] if q.doc else ''}")
         return 0
-    spark = get_spark(args.name)
+    # Arguments and the registry are checked before get_spark starts the JVM.
     if args.query:
         from .queries import all_queries
 
@@ -91,13 +91,13 @@ def main(argv: list[str] | None = None) -> int:
                 "(see the query doc / COVERAGE.md).",
                 file=sys.stderr,
             )
-        df = registry[args.query].fn(spark, args.sf_dir)
+        df = registry[args.query].fn(get_spark(args.name), args.sf_dir)
         if args.explain:
             df.explain("formatted")
         df.show(args.limit, truncate=False)
         return 0
     if args.replay_dir:
-        src, key = events_stream(spark, args.replay_dir), "event_id"
+        src, key = events_stream(get_spark(args.name), args.replay_dir), "event_id"
         fields = ["ts", "user_id", "event_type", "value"]
     else:
         if not (args.zookeeper and args.source_topic and args.registry):
@@ -112,11 +112,13 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit(f"topics {sorted(newest)} have different newest value schemas")
         reader = reader_struct(first)
         kafka = kafka_stream(
-            spark,
+            get_spark(args.name),
             bootstrap_servers=args.zookeeper,
             topics=args.source_topic,
             starting_offsets="earliest" if args.earliest else "latest",
         )
+        # Only key and value: Kafka's own columns (topic, offset, ...) would
+        # clash with reader fields of the same name.
         src, key = decode_confluent_avro(kafka.select("key", "value"), reader, schema_map), "key"
         fields = reader.fieldNames()
     stream = src.select(

@@ -10,9 +10,9 @@ runs again on every table load, so it holds only what the package needs
 everywhere, and only what Spark would not set by itself.  `get_spark` adds
 what must be fixed before the JVM starts (master, heap, UI) and two
 starting values of the sessions it builds, the broadcast-join threshold and
-the shuffle partition count: values a caller may change, which `tune()`
-must not reset.  Split sizing is Spark's own:
-a file scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))`
+the shuffle partition count (the session's `defaultParallelism`, at least
+8): values a caller may change, which `tune()` must not reset.  Split
+sizing is Spark's own: a file scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))`
 per task, so small tables stay one split and a backlog of many small stream
 files packs into about one task per core.  AQE (partition coalescing,
 skew-join splitting) is on by Spark's default, so a static
@@ -117,19 +117,17 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "sparkstreaming-quickstart-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a tuned local session.
 
-    Honors SPARK_GRAFT_CPUS for core count (bench contract) and
-    SPARK_DRIVER_MEMORY for the heap (default: half of physical RAM, 1g-32g).
-    On a real cluster, drop `master` and submit normally; every conf here is
-    still appropriate.
+    Honors SPARK_GRAFT_CPUS for the core count of the default master (bench
+    contract) and SPARK_DRIVER_MEMORY for the heap (default: half of
+    physical RAM, 1g-32g).  The shuffle partition count starts at the built
+    session's `defaultParallelism`, but at least 8.  On a real cluster, drop
+    `master` and submit normally; every conf here is still appropriate.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
     ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", f"{max(1, min(32, ram_gb // 2))}g")
     spark = (
@@ -141,5 +139,5 @@ def get_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(spark.sparkContext.defaultParallelism, 8)))
     return tune(spark)

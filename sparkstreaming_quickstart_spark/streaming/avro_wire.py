@@ -14,20 +14,22 @@ module does the same without the spark-avro connector:
     topics; fields are then projected onto the caller's reader schema by
     name (missing -> null, extra -> dropped) -- Avro schema resolution's
     name-matching core;
-  * `decode_confluent_avro`, a mapInPandas operator that applies the above
-    to any batch or streaming DataFrame with a binary `value` column, one
-    record at a time in the Python worker.  The Kafka route composes it
-    onto the source: `decode_confluent_avro(kafka_stream(...),
-    reader_struct(newest), fetch_subject_schemas(...))`.
+  * `decode_confluent_avro`, which applies the above to any batch or
+    streaming DataFrame with a binary `value` column through one
+    Arrow-optimized Python UDF over `value` alone; every other column
+    stays in the JVM.  The Kafka route composes it onto the source:
+    `decode_confluent_avro(kafka_stream(...), reader_struct(newest),
+    fetch_subject_schemas(...))`.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -269,37 +271,32 @@ def decode_confluent_avro(
 ) -> DataFrame:
     """Decode a Confluent-wire Avro `value` column against a schema-id map.
 
-    Works on batch AND streaming DataFrames (mapInPandas is supported in
-    both).  Output columns: every input column but `value` + `schema_id`
-    int + one column per `reader_schema` field, projected by name from the
-    per-record writer schema (absent fields -> null: the name-matching core
-    of Avro schema resolution, enough for additive evolution; full
-    alias/promotion rules are out of scope).  Each record is decoded by a
-    Python loop over the batch's values.
+    Works on batch AND streaming DataFrames.  Output columns: every input
+    column but `value` + `schema_id` int + one column per `reader_schema`
+    field, projected by name from the per-record writer schema (absent
+    fields -> null: the name-matching core of Avro schema resolution,
+    enough for additive evolution; full alias/promotion rules are out of
+    scope).  A null `value` (a Kafka tombstone) decodes to nulls, as
+    Confluent's deserializer returns null for a null payload.  A decoded
+    name that is also a kept input column raises a ValueError.
+
+    The decode is one Arrow-optimized Python UDF over `value` alone, so the
+    other columns stay in the JVM and filters or projections on them plan
+    around it (a filter on `offset` pushes into the scan).
     """
-    import pandas as pd
-
     keep = [c for c in df.columns if c != "value"]
+    field_names = reader_schema.fieldNames()
+    clash = sorted({"schema_id", *field_names} & set(keep))
+    if clash:
+        raise ValueError(f"decoded columns {clash} clash with input columns of the same name")
     parsed = {k: _norm(v) for k, v in schema_map.items()}
-    field_names = [f.name for f in reader_schema.fields]
-    out_schema = StructType(
-        [f for f in df.select(*keep).schema.fields]
-    ).add("schema_id", IntegerType())
-    for f in reader_schema.fields:
-        out_schema = out_schema.add(f)
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cols = [], {n: [] for n in field_names}
-            for raw in pdf["value"]:
-                sid, rec = wire_decode(bytes(raw), parsed)
-                ids.append(sid)
-                for n in field_names:
-                    cols[n].append(rec.get(n) if isinstance(rec, dict) else None)
-            out = pdf[keep].copy()
-            out["schema_id"] = ids
-            for n in field_names:
-                out[n] = cols[n]
-            yield out
+    def decode_value(raw: bytes | None) -> tuple | None:
+        if raw is None:
+            return None
+        sid, rec = wire_decode(bytes(raw), parsed)
+        return (sid, *(rec.get(n) if isinstance(rec, dict) else None for n in field_names))
 
-    return df.mapInPandas(decode_batches, out_schema)
+    out = StructType([StructField("schema_id", IntegerType()), *reader_schema.fields])
+    decoded = F.udf(decode_value, out, useArrow=True)("value").alias("value")
+    return df.select(*keep, decoded).select(*keep, "value.*")

@@ -102,6 +102,7 @@ def test_schema_id_dispatch_with_evolution(spark):
         (1, wire_encode(1, {"name": "ada", "age": 36}, v1)),
         (2, wire_encode(2, {"name": "grace", "age": 45, "email": "g@navy.mil"}, v2)),
         (3, wire_encode(1, {"name": "alan", "age": 41}, v1)),
+        (4, None),  # a Kafka tombstone decodes to nulls, as Confluent's deserializer does
     ]
     df = spark.createDataFrame(msgs, "k long, value binary")
     reader = StructType([
@@ -113,6 +114,62 @@ def test_schema_id_dispatch_with_evolution(spark):
     assert (out[1].name, out[1].age, out[1].email, out[1].schema_id) == ("ada", 36, None, 1)
     assert (out[2].name, out[2].age, out[2].email, out[2].schema_id) == ("grace", 45, "g@navy.mil", 2)
     assert (out[3].name, out[3].age, out[3].email, out[3].schema_id) == ("alan", 41, None, 1)
+    assert (out[4].name, out[4].age, out[4].email, out[4].schema_id) == (None, None, None, None)
+
+
+def test_decode_rejects_reader_field_named_like_a_kept_column(spark):
+    # A reader field `key` over a `key, value` frame would give two `key`
+    # columns; it is refused when the query is built, naming the clash.
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import decode_confluent_avro
+
+    df = spark.createDataFrame([], "key binary, value binary")
+    reader = StructType([StructField("key", StringType()), StructField("n", StringType())])
+    with pytest.raises(ValueError, match=r"\['key'\] clash"):
+        decode_confluent_avro(df, reader, {1: "string"})
+
+
+def test_decode_plans_around_kafka_columns(spark, tmp_path):
+    # Decode only takes `value` into Python, so a filter and a projection on
+    # the Kafka columns plan below it: the offset predicate reaches the
+    # scan, unused columns are not read, and the Python UDF sees `value`.
+    import datetime
+    import re
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from sparkstreaming_quickstart_spark.plans.inspect import explain_str
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import (
+        decode_confluent_avro,
+        wire_encode,
+    )
+
+    v1 = {"type": "record", "name": "m", "fields": [
+        {"name": "name", "type": "string"}, {"name": "age", "type": "long"}]}
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [(f"k{i}".encode(), wire_encode(1, {"name": f"u{i}", "age": i}, v1), "t", 0, i, ts)
+            for i in range(20)]
+    d = str(tmp_path / "kafka")
+    spark.createDataFrame(
+        rows, "key binary, value binary, topic string, partition int, offset long, timestamp timestamp"
+    ).coalesce(1).write.parquet(d)
+    reader = StructType([StructField("name", StringType()), StructField("age", LongType())])
+    df = (
+        decode_confluent_avro(spark.read.parquet(d), reader, {1: v1})
+        .filter(F.col("offset") < 10)
+        .select("key", "name")
+    )
+    plan = explain_str(df, "simple")
+    assert "MapInPandas" not in plan, plan
+    evals = re.findall(r"ArrowEvalPython \[(\w+)\((.*?)\)#\d+\]", plan)
+    assert len(evals) == 1 and re.fullmatch(r"value#\d+", evals[0][1]), plan
+    read_schema = re.search(r"ReadSchema: (struct<[^>]*>)", plan).group(1)
+    assert "topic" not in read_schema and "partition" not in read_schema, plan
+    data_filters = re.search(r"DataFilters: \[(.*?)\], Format", plan).group(1)
+    assert re.search(r"\(offset#\d+L < 10\)", data_filters), plan
+    assert sorted(df.collect()) == sorted((f"k{i}".encode(), f"u{i}") for i in range(10))
 
 
 def test_streaming_wire_decode_end_to_end(spark, tmp_path):

@@ -7,11 +7,14 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkstreaming_quickstart_spark.plans.inspect import explain_str
 from sparkstreaming_quickstart_spark.sources.catalog import load_table
 from sparkstreaming_quickstart_spark.streaming.source import events_stream
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_replay_drain(sf_dir, tmp_path):
@@ -31,7 +34,7 @@ def test_cli_replay_drain(sf_dir, tmp_path):
             "--name",
             "cli-test",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
         capture_output=True,
         text=True,
@@ -47,7 +50,7 @@ def test_cli_replay_drain_without_checkpoint_folder_starts_afresh(sf_dir):
     for _ in range(2):
         out = subprocess.run(
             [sys.executable, "-m", "sparkstreaming_quickstart_spark", "--replay-dir", sf_dir, "--drain"],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            cwd=REPO,
             env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
             capture_output=True,
             text=True,
@@ -70,7 +73,7 @@ def test_cli_query_mode_runs_registered_query(sf_dir):
             "--limit",
             "3",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
         capture_output=True,
         text=True,
@@ -80,18 +83,31 @@ def test_cli_query_mode_runs_registered_query(sf_dir):
     assert "l_returnflag" in out.stdout and "sum_qty" in out.stdout
 
 
-def test_cli_requires_kafka_args():
+def test_cli_requires_kafka_args(monkeypatch):
+    # Bad arguments and an unreachable registry fail before the JVM starts.
+    from urllib.error import URLError
+
+    from sparkstreaming_quickstart_spark import cli
+    from sparkstreaming_quickstart_spark.streaming import schema_registry
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("get_spark called before the arguments were checked")
+
+    def unreachable(url, timeout):
+        raise URLError("connection refused")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    monkeypatch.setattr(schema_registry, "urlopen", unreachable)
+    kafka = ["--zookeeper", "localhost:9092", "--source-topic", "users"]
     # no source at all, and the Kafka path without --registry
-    for extra in ([], ["--zookeeper", "localhost:9092", "--source-topic", "users"]):
-        out = subprocess.run(
-            [sys.executable, "-m", "sparkstreaming_quickstart_spark", *extra],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            capture_output=True,
-            text=True,
-            timeout=120,
-        )
-        assert out.returncode != 0
-        assert "--zookeeper" in out.stderr and "--registry" in out.stderr
+    for extra in ([], kafka):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(extra)
+        assert "--zookeeper" in str(exc.value) and "--registry" in str(exc.value)
+    with pytest.raises(URLError):
+        cli.main([*kafka, "--registry", "http://registry:8081"])
+    with pytest.raises(SystemExit, match="unknown query 'q_none'"):
+        cli.main(["--query", "q_none"])
 
 
 # Runs cli.main with the Kafka source swapped for a file stream of
@@ -163,7 +179,7 @@ def test_cli_kafka_path_decodes_every_schema_version(spark, tmp_path):
             argv += ["--source-topic", t]
         return subprocess.run(
             [sys.executable, "-c", _KAFKA_CLI_CHILD, src_dir, str(served_path), *argv],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            cwd=REPO,
             env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
             capture_output=True,
             text=True,
@@ -305,7 +321,7 @@ def test_ground_truth_tags_and_cli_surfacing(sf_dir):
         "q389_knn_cell_recall",
     }
     assert {q.scale_class for q in qs.values()} <= {"scale", "ground-truth"}
-    with open("/root/repo/tools/plan_audit.json") as fh:
+    with open(os.path.join(REPO, "tools", "plan_audit.json")) as fh:
         audit = json.load(fh)
     for name, m in audit.items():
         if m.get("cartesian_products", 0) > 0:
@@ -313,7 +329,7 @@ def test_ground_truth_tags_and_cli_surfacing(sf_dir):
     # --list-queries marks the tagged entries
     out = subprocess.run(
         [sys.executable, "-m", "sparkstreaming_quickstart_spark", "--list-queries"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=120,
@@ -338,7 +354,7 @@ def test_ground_truth_tags_and_cli_surfacing(sf_dir):
             "--limit",
             "3",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
         capture_output=True,
         text=True,

@@ -20,7 +20,7 @@ def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
     names = args[1:] if args and os.path.isdir(args[0]) else args
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+    spark = get_spark("oracle-check")
     failures = 0
     for name, q in sorted(all_queries().items()):
         if names and name not in names:
