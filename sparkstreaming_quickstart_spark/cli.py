@@ -104,7 +104,13 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit("--zookeeper, --source-topic and --registry required without --replay-dir")
         schema_map, newest = {}, {}
         for topic in args.source_topic:
-            versions = fetch_subject_schemas(args.registry, f"{topic}-value")
+            subject = f"{topic}-value"
+            try:
+                versions = fetch_subject_schemas(args.registry, subject)
+            except OSError as e:  # urllib's URLError and HTTPError (an unknown subject is a 404)
+                raise SystemExit(f"registry {args.registry}: cannot read subject {subject!r}: {e}") from None
+            if not versions:
+                raise SystemExit(f"registry {args.registry}: subject {subject!r} has no versions")
             schema_map.update(versions)  # ids are global within a registry
             newest[topic] = json.loads(list(versions.values())[-1])
         first = newest[args.source_topic[0]]

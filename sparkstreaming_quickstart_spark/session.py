@@ -8,16 +8,21 @@ Two situations:
 `tune()` is the one place package confs are applied, in both situations.  It
 runs again on every table load, so it holds only what the package needs
 everywhere, and only what Spark would not set by itself.  `get_spark` adds
-what must be fixed before the JVM starts (master, heap, UI) and two
-starting values of the sessions it builds, the broadcast-join threshold and
-the shuffle partition count (the session's `defaultParallelism`, at least
-8): values a caller may change, which `tune()` must not reset.  Split
-sizing is Spark's own: a file scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))`
-per task, so small tables stay one split and a backlog of many small stream
-files packs into about one task per core.  AQE (partition coalescing,
-skew-join splitting) is on by Spark's default, so a static
-`spark.sql.shuffle.partitions` only needs to be an upper bound.  All
-timestamps are UTC so results are independent of cluster timezone.
+what must be fixed before the JVM starts (master, heap, UI) and one starting
+value of the sessions it builds, the broadcast-join threshold: a value a
+caller may change, which `tune()` must not reset.
+
+The shuffle partition count is one policy for batch shuffles and state
+stores (one per partition, fixed at a query's first checkpoint) alike: on a
+local master `tune()` sets it to the session's cores unless someone set it.
+A cluster keeps Spark's default or the operator's setting, since executors
+may not have registered when `tune()` runs.  AQE (partition coalescing,
+skew-join splitting) is on by Spark's default, so for batch shuffles the
+count only needs to be an upper bound.  Split sizing is Spark's own: a file
+scan packs `min(maxPartitionBytes, max(openCostInBytes, bytes/cores))` per
+task, so small tables stay one split and a backlog of many small stream
+files packs into about one task per core.  All timestamps are UTC so
+results are independent of cluster timezone.
 """
 
 from __future__ import annotations
@@ -108,6 +113,11 @@ def tune(spark: SparkSession) -> SparkSession:
             # takes effect with fs.file.impl.disable.cache=true, which makes
             # every getFileSystem call build a new instance.
             spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", FS_CHECKPOINT_MANAGER)
+            # One shuffle partition (and so one state store) per core, unless
+            # a caller or the session builder set the count: `getAll` holds
+            # only the keys someone set, not Spark's default of 200.
+            if "spark.sql.shuffle.partitions" not in spark.conf.getAll:
+                spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     except Exception:
         pass
     _ship_package(spark)
@@ -122,9 +132,9 @@ def get_spark(
 
     Honors SPARK_GRAFT_CPUS for the core count of the default master (bench
     contract) and SPARK_DRIVER_MEMORY for the heap (default: half of
-    physical RAM, 1g-32g).  The shuffle partition count starts at the built
-    session's `defaultParallelism`, but at least 8.  On a real cluster, drop
-    `master` and submit normally; every conf here is still appropriate.
+    physical RAM, 1g-32g).  `tune()` sets the shuffle partition count to the
+    session's cores.  On a real cluster, drop `master` and submit normally;
+    every conf here is still appropriate.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -139,5 +149,4 @@ def get_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(spark.sparkContext.defaultParallelism, 8)))
     return tune(spark)

@@ -44,40 +44,18 @@ def run_foreach_batch(
 def run_to_memory(stream: DataFrame, output_mode: str = "append") -> str:
     """Drain a stream into an in-memory table `mem_<uuid>` with availableNow;
     returns the table name.  This is the test/driver harness for streaming
-    queries, on Spark's temporary checkpoint.
-
-    State-partition bound: a streaming query materializes one state store
-    instance per shuffle partition, fixed at first checkpoint.  Under an
-    untuned session (shuffle.partitions=200) a stateful drain pays 200 state
-    stores x per-batch task overhead on a 32-core box -- measured 31s -> ~5s
-    for the stream-stream full-outer join.  Cap state partitions at the
-    core count for the query.  The query runs on its own clone of the
-    session conf, taken in `start()`, so the caller's setting is restored as
-    soon as `start()` returns.  On a real cluster the cap is total-cores,
-    set once in session config instead.
-    """
-    spark = stream.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
+    queries, on Spark's temporary checkpoint.  A stateful query runs one
+    state store per shuffle partition of the session (`session.tune()` sets
+    the count to the cores of a local session)."""
     table = f"mem_{uuid.uuid4().hex[:8]}"
-    try:
-        try:
-            prev_n = int(prev)
-        except (TypeError, ValueError):
-            prev_n = None
-        if prev_n is None or prev_n > cores:
-            spark.conf.set(key, str(cores))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set(key, prev)
-    q.awaitTermination()
+    (
+        stream.writeStream.format("memory")
+        .queryName(table)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return table
 
 

@@ -84,8 +84,11 @@ def test_cli_query_mode_runs_registered_query(sf_dir):
 
 
 def test_cli_requires_kafka_args(monkeypatch):
-    # Bad arguments and an unreachable registry fail before the JVM starts.
-    from urllib.error import URLError
+    # Bad arguments, an unreachable registry, an unknown subject (404) and a
+    # subject with no versions each end in one line before the JVM starts.
+    import io
+    import re
+    from urllib.error import HTTPError, URLError
 
     from sparkstreaming_quickstart_spark import cli
     from sparkstreaming_quickstart_spark.streaming import schema_registry
@@ -96,16 +99,25 @@ def test_cli_requires_kafka_args(monkeypatch):
     def unreachable(url, timeout):
         raise URLError("connection refused")
 
+    def unknown_subject(url, timeout):
+        raise HTTPError(url, 404, "Subject 'users-value' not found.", None, None)
+
+    def no_versions(url, timeout):
+        return io.BytesIO(b"[]")
+
     monkeypatch.setattr(cli, "get_spark", no_session)
-    monkeypatch.setattr(schema_registry, "urlopen", unreachable)
     kafka = ["--zookeeper", "localhost:9092", "--source-topic", "users"]
     # no source at all, and the Kafka path without --registry
     for extra in ([], kafka):
         with pytest.raises(SystemExit) as exc:
             cli.main(extra)
         assert "--zookeeper" in str(exc.value) and "--registry" in str(exc.value)
-    with pytest.raises(URLError):
-        cli.main([*kafka, "--registry", "http://registry:8081"])
+    registry = "http://registry:8081"
+    for urlopen in (unreachable, unknown_subject, no_versions):
+        monkeypatch.setattr(schema_registry, "urlopen", urlopen)
+        with pytest.raises(SystemExit, match=re.escape(f"registry {registry}: ")) as exc:
+            cli.main([*kafka, "--registry", registry])
+        assert "'users-value'" in str(exc.value) and "\n" not in str(exc.value), urlopen.__name__
     with pytest.raises(SystemExit, match="unknown query 'q_none'"):
         cli.main(["--query", "q_none"])
 

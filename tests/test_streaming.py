@@ -735,11 +735,14 @@ def test_every_defaulted_parameter_is_passed_by_some_call():
     assert not offenders, "defaulted parameters that no call passes:\n" + "\n".join(offenders)
 
 
-def test_run_to_memory_holds_shuffle_partitions_only_across_start(spark, sf_dir, monkeypatch):
-    """run_to_memory caps the query's state partitions at the core count, but
-    the session-wide setting is the caller's again while the query drains:
-    the query runs on a clone of the session conf taken in start()."""
+def test_state_partitions_are_the_cores_unless_a_caller_sets_them(spark, sf_dir, monkeypatch):
+    """One shuffle-partition policy: on a local master tune() sets the count
+    to the session's cores when nobody set it, and a caller's own value
+    survives tune() and run_to_memory; the drained stateful query runs one
+    state store per partition of that value."""
     from pyspark.sql.streaming import StreamingQuery
+
+    from sparkstreaming_quickstart_spark.session import tune
 
     key = "spark.sql.shuffle.partitions"
     cores = spark.sparkContext.defaultParallelism
@@ -747,22 +750,53 @@ def test_run_to_memory_holds_shuffle_partitions_only_across_start(spark, sf_dir,
     await_termination = StreamingQuery.awaitTermination
 
     def spy(self, timeout=None):
-        seen["partitions"], seen["query"] = spark.conf.get(key), self
+        seen["query"] = self
         return await_termination(self, timeout)
 
     monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(cores + 5))
     try:
+        spark.conf.unset(key)
+        assert key not in spark.conf.getAll
+        assert tune(spark).conf.get(key) == str(cores)
+        spark.conf.set(key, str(cores + 5))
+        assert tune(spark).conf.get(key) == str(cores + 5)
         counts = events_stream(spark, sf_dir).groupBy("event_type").count()
         table = run_to_memory(counts, output_mode="complete")
         assert spark.conf.get(key) == str(cores + 5)
     finally:
         spark.conf.set(key, prev)
-    assert seen["partitions"] == str(cores + 5)
     ops = [op for p in seen["query"].recentProgress for op in p["stateOperators"]]
-    assert ops and all(op["numShufflePartitions"] == cores for op in ops)
+    assert ops and all(op["numShufflePartitions"] == cores + 5 for op in ops)
     assert spark.table(table).count() == load_table(spark, sf_dir, "events").select("event_type").distinct().count()
+
+
+def test_only_session_tune_writes_shuffle_partitions():
+    """The shuffle partition count has one owner: outside tests, a string
+    naming spark.sql.shuffle.partitions (a conf set, a builder config, a SQL
+    SET) appears only inside session.tune().  Docstrings are prose."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    paths = sorted((root / "sparkstreaming_quickstart_spark").rglob("*.py")) + sorted((root / "tools").rglob("*.py"))
+    paths += [root / "bench.py", root / "__spark_entry__.py"]
+    owner_file, hits, allowed = "sparkstreaming_quickstart_spark/session.py", set(), set()
+    for path in paths:
+        rel = str(path.relative_to(root))
+        tree = ast.parse(path.read_text())
+        docstrings = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+        for node in ast.walk(tree):
+            if rel == owner_file and isinstance(node, ast.FunctionDef) and node.name == "tune":
+                allowed |= {(rel, line) for line in range(node.lineno, node.end_lineno + 1)}
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "spark.sql.shuffle.partitions" in node.value
+                and id(node) not in docstrings
+            ):
+                hits.add((rel, node.lineno))
+    assert hits and hits <= allowed, sorted(hits - allowed)
 
 
 def test_drains_without_checkpoint_leave_no_checkpoint_dir(spark, sf_dir):

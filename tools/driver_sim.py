@@ -1,11 +1,13 @@
 """Driver simulation: vanilla session, cwd outside the repo, full contract."""
 import importlib.util
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
