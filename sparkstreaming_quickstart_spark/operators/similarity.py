@@ -925,8 +925,16 @@ def bucketed_euclid_pairs_arrow(
             }
         )
 
-    return grouped.groupBy(*group_cols).applyInPandas(
-        kernel, "id1 long, id2 long, eucl_dist double"
+    # A bucket costs the square of its rows, not its bytes, so AQE's
+    # byte-sized coalescing of the groupBy shuffle packs heavy buckets onto
+    # fewer tasks than cores (q178 at sf0.1 on 4 cores: 2 tasks).  An
+    # explicit count is never coalesced, and two partitions per core let
+    # the scheduler balance a few heavy buckets.
+    par = grouped.sparkSession.sparkContext.defaultParallelism
+    return (
+        grouped.repartition(2 * par, *group_cols)
+        .groupBy(*group_cols)
+        .applyInPandas(kernel, "id1 long, id2 long, eucl_dist double")
     )
 
 

@@ -164,6 +164,9 @@ def test_q178_plan_drops_wide_struct_join(spark, sf_dir):
     # re-verify joins; the new plan has NO join at all
     for tok in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
         assert tok not in plan, plan
+    # the kernel's input shuffle has an explicit count, which AQE's
+    # byte-sized coalescing leaves alone (a bucket costs its rows squared)
+    assert "REPARTITION_BY_NUM" in plan, plan
 
 
 def test_simhash_prefiltered_expansion_matches_distinct_then_filter(spark):
