@@ -27,7 +27,9 @@ results are independent of cluster timezone.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import subprocess
 import tempfile
 import zipfile
 
@@ -50,11 +52,14 @@ FS_CHECKPOINT_MANAGER = (
 )
 
 _SHIPPED: set[str] = set()
+_JARRED: set[str] = set()
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors regardless of the driver's
-    working directory (Python UDF closures reference it by module name).
+    working directory: the batch queries' Python UDF and mapInPandas
+    closures reference it by module name.  The streaming ingest path needs
+    none of it, since its Avro decode runs in the JVM (`add_package_jar`).
 
     Zips the package once per process and registers it with addPyFile --
     the same mechanism a spark-submit --py-files deployment would use on a
@@ -82,6 +87,55 @@ def _ship_package(spark: SparkSession) -> None:
     except Exception:
         pass  # already registered in this context
     _SHIPPED.add(app_id)
+
+
+def add_package_jar(spark: SparkSession) -> None:
+    """Make the package's Java classes (`jvm/*.java`) loadable on the driver
+    and on executors.
+
+    Compiles the sources once per source hash and Java version into a jar
+    under the temp dir, with `javac` from the running JVM's `java.home` and
+    that JVM's own class path (Spark's and Avro's jars), and registers it
+    with `ADD JAR` once per application.  Every call also points the calling
+    thread's context class loader at the session's jar loader, as `ADD JAR`
+    does for the thread that runs it, so py4j finds the classes from any
+    thread.  A JVM without `javac` (a JRE) is a RuntimeError naming the
+    missing compiler.
+    """
+    jvm = spark.sparkContext._jvm
+    app_id = spark.sparkContext.applicationId
+    if app_id not in _JARRED:
+        props = jvm.java.lang.System
+        java_home, version = props.getProperty("java.home"), props.getProperty("java.version")
+        src_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+        sources = sorted(os.path.join(src_dir, f) for f in os.listdir(src_dir) if f.endswith(".java"))
+        digest = hashlib.sha1(version.encode())
+        for src in sources:
+            with open(src, "rb") as fh:
+                digest.update(os.path.basename(src).encode() + b"\0" + fh.read())
+        jar = os.path.join(tempfile.gettempdir(), f"ssq-jvm-{digest.hexdigest()[:16]}.jar")
+        if not os.path.exists(jar):
+            javac = os.path.join(java_home, "bin", "javac")
+            if not os.access(javac, os.X_OK):
+                raise RuntimeError(f"no Java compiler at {javac}: the package's JVM classes need a JDK, not a JRE")
+            with tempfile.TemporaryDirectory(prefix="ssq-javac-") as classes:
+                done = subprocess.run(
+                    [javac, "-nowarn", "-d", classes, "-cp", props.getProperty("java.class.path"), *sources],
+                    capture_output=True,
+                    text=True,
+                )
+                if done.returncode:
+                    raise RuntimeError(f"javac failed on {src_dir}:\n{done.stderr}")
+                tmp = f"{jar}.{os.getpid()}.tmp"
+                with zipfile.ZipFile(tmp, "w") as zf:
+                    for root, _dirs, files in os.walk(classes):
+                        for f in files:
+                            full = os.path.join(root, f)
+                            zf.write(full, os.path.relpath(full, classes))
+            os.replace(tmp, jar)
+        spark.sql(f"ADD JAR '{jar}'")
+        _JARRED.add(app_id)
+    jvm.java.lang.Thread.currentThread().setContextClassLoader(spark._jsparkSession.sharedState().jarClassLoader())
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -5,21 +5,23 @@ Confluent wire header (magic byte 0 + big-endian 4-byte schema id) via its
 deserializer (Processor.java:51,128-130), then exposes GenericRecords.  This
 module does the same without the spark-avro connector:
 
+  * `decode_confluent_avro`, which decodes the binary `value` column of any
+    batch or streaming DataFrame in the JVM: one Java UDF over `value`
+    alone (`jvm/ConfluentAvroDecode.java`, built and loaded by
+    `session.add_package_jar`) dispatches on the schema id, decodes with
+    one cached Avro `GenericDatumReader` per writer schema (the Avro jar
+    Spark ships), and projects fields onto the caller's reader schema by
+    name (missing -> null, extra -> dropped, Avro's numeric promotions per
+    reader column).  The {schema_id: writer schema} map is resolved at
+    query build time (SURVEY.md 1.2), so mixed-schema topics decode.  Every
+    other column stays in the plan untouched.  The Kafka route composes it
+    onto the source: `decode_confluent_avro(kafka_stream(...),
+    reader_struct(newest), fetch_subject_schemas(...))`;
   * a minimal, spec-complete-for-records Avro *binary* codec in pure Python
     (varint/zigzag ints, IEEE float/double, length-prefixed bytes/string,
-    records, unions, arrays, maps, enums, fixed) -- the Avro 1.x binary
-    encoding is a public, stable format;
-  * per-record schema-id dispatch: a {schema_id: writer schema JSON} map,
-    resolved at query build time (SURVEY.md 1.2), decodes mixed-schema
-    topics; fields are then projected onto the caller's reader schema by
-    name (missing -> null, extra -> dropped) -- Avro schema resolution's
-    name-matching core;
-  * `decode_confluent_avro`, which applies the above to any batch or
-    streaming DataFrame with a binary `value` column through one
-    Arrow-optimized Python UDF over `value` alone; every other column
-    stays in the JVM.  The Kafka route composes it onto the source:
-    `decode_confluent_avro(kafka_stream(...), reader_struct(newest),
-    fetch_subject_schemas(...))`.
+    records, unions, arrays, maps, enums, fixed) with the Confluent header
+    (`wire_encode`, `wire_decode`): the reference codec that fixtures write
+    with and tests check the JVM decode against.
 """
 
 from __future__ import annotations
@@ -28,8 +30,7 @@ import json
 import struct
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -41,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..session import add_package_jar
 
 MAGIC = 0
 
@@ -273,30 +276,28 @@ def decode_confluent_avro(
 
     Works on batch AND streaming DataFrames.  Output columns: every input
     column but `value` + `schema_id` int + one column per `reader_schema`
-    field, projected by name from the per-record writer schema (absent
-    fields -> null: the name-matching core of Avro schema resolution,
-    enough for additive evolution; full alias/promotion rules are out of
-    scope).  A null `value` (a Kafka tombstone) decodes to nulls, as
-    Confluent's deserializer returns null for a null payload.  A decoded
-    name that is also a kept input column raises a ValueError.
+    field, projected by name from the per-record writer schema: a field the
+    writer lacks is null, and Avro's numeric promotions (int -> long, float
+    or double; long -> float or double; float -> double) widen a value to
+    its column.  A null `value` (a Kafka tombstone) decodes to nulls, as
+    Confluent's deserializer returns null for a null payload.  Malformed
+    input (short header, bad magic byte, unknown schema id, truncated body,
+    an index outside the schema) fails the query with the same cause as
+    `wire_decode`'s ValueError.  A decoded name that is also a kept input
+    column raises a ValueError.
 
-    The decode is one Arrow-optimized Python UDF over `value` alone, so the
-    other columns stay in the JVM and filters or projections on them plan
-    around it (a filter on `offset` pushes into the scan).
+    The decode is one Java UDF over `value` alone, so the plan has no
+    Python stage, and filters or projections on the other columns plan
+    around it (a filter on `offset` pushes into the scan).  The first call
+    in an application compiles and loads the package jar
+    (`session.add_package_jar`).
     """
     keep = [c for c in df.columns if c != "value"]
-    field_names = reader_schema.fieldNames()
-    clash = sorted({"schema_id", *field_names} & set(keep))
+    clash = sorted({"schema_id", *reader_schema.fieldNames()} & set(keep))
     if clash:
         raise ValueError(f"decoded columns {clash} clash with input columns of the same name")
-    parsed = {k: _norm(v) for k, v in schema_map.items()}
-
-    def decode_value(raw: bytes | None) -> tuple | None:
-        if raw is None:
-            return None
-        sid, rec = wire_decode(bytes(raw), parsed)
-        return (sid, *(rec.get(n) if isinstance(rec, dict) else None for n in field_names))
-
-    out = StructType([StructField("schema_id", IntegerType()), *reader_schema.fields])
-    decoded = F.udf(decode_value, out, useArrow=True)("value").alias("value")
-    return df.select(*keep, decoded).select(*keep, "value.*")
+    spark = df.sparkSession
+    add_package_jar(spark)
+    writers = {int(k): json.dumps(_norm(v)) for k, v in schema_map.items()}
+    decoded = spark._jvm.ssq.ConfluentAvroDecode.column(df["value"]._jc, writers, reader_schema.json())
+    return df.select(*keep, Column(decoded).alias("value")).select(*keep, "value.*")

@@ -5,11 +5,11 @@ The reference resolves writer schemas at runtime from `schema.registry.url`
 Here the resolution happens once, on the driver, when the query is built
 (SURVEY.md 1.2): `fetch_subject_schemas` reads every version of a subject
 over the registry's public REST surface, and the resulting
-`{schema_id: schema_json}` map ships in `decode_confluent_avro`'s closure,
-so executors never talk to the registry.  Schema ids are immutable, so the
-map never goes stale; a record whose id is not in it (a version registered
-after the query started) fails `wire_decode` with a ValueError naming the
-id.
+`{schema_id: schema_json}` map is built into `decode_confluent_avro`'s JVM
+function, so executors never talk to the registry.  Schema ids are
+immutable, so the map never goes stale; a record whose id is not in it (a
+version registered after the query started) fails the query with an error
+naming the id.
 
 The transport is a plain `http_get(url) -> str` callable: `urllib.request`
 in production (stdlib, no new dependency), a fake in tests.

@@ -5,8 +5,8 @@ Processor.java:118-139): `kafka_stream` only reads
 `readStream.format("kafka")`.  Per-record writer-schema decode is its own
 operator, composed by the caller: `decode_confluent_avro(kafka_stream(...),
 reader, fetch_subject_schemas(...))` (streaming/avro_wire.py,
-streaming/schema_registry.py).  It is a Python UDF over `value` alone, so
-filters and projections on the Kafka columns plan below it.  Offsets/group management move into the
+streaming/schema_registry.py).  It is one JVM function over `value` alone,
+so filters and projections on the Kafka columns plan below it.  Offsets/group management move into the
 checkpoint WAL, superseding the reference's `enable.auto.commit=false` +
 never-implemented manual commit (Processor.java:132-135).
 

@@ -131,9 +131,10 @@ def test_decode_rejects_reader_field_named_like_a_kept_column(spark):
 
 
 def test_decode_plans_around_kafka_columns(spark, tmp_path):
-    # Decode only takes `value` into Python, so a filter and a projection on
-    # the Kafka columns plan below it: the offset predicate reaches the
-    # scan, unused columns are not read, and the Python UDF sees `value`.
+    # The decode is one JVM function over `value`, so the plan has no Python
+    # stage, and a filter and a projection on the Kafka columns plan below
+    # it: the offset predicate reaches the scan and unused columns are not
+    # read.
     import datetime
     import re
 
@@ -162,14 +163,79 @@ def test_decode_plans_around_kafka_columns(spark, tmp_path):
         .select("key", "name")
     )
     plan = explain_str(df, "simple")
-    assert "MapInPandas" not in plan, plan
-    evals = re.findall(r"ArrowEvalPython \[(\w+)\((.*?)\)#\d+\]", plan)
-    assert len(evals) == 1 and re.fullmatch(r"value#\d+", evals[0][1]), plan
+    for python_exec in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert python_exec not in plan, plan
+    calls = re.findall(r"confluent_avro_decode\((.*?)\)", plan)
+    assert len(calls) == 1 and re.fullmatch(r"value#\d+", calls[0]), plan
     read_schema = re.search(r"ReadSchema: (struct<[^>]*>)", plan).group(1)
     assert "topic" not in read_schema and "partition" not in read_schema, plan
     data_filters = re.search(r"DataFilters: \[(.*?)\], Format", plan).group(1)
     assert re.search(r"\(offset#\d+L < 10\)", data_filters), plan
     assert sorted(df.collect()) == sorted((f"k{i}".encode(), f"u{i}") for i in range(10))
+
+
+_MALFORMED = {
+    "5-byte header": b"\x00\x00",
+    "bad magic byte": b"\x01\x00\x00\x00\x01\x02",
+    r"schema id 9 not in the resolved registry map \(ids \[1\]\)": b"\x00\x00\x00\x00\x09\x02",
+    "truncated Avro data": b"\x00\x00\x00\x00\x01\x14abc",  # a 10-byte string, 3 bytes left
+}
+
+
+@pytest.mark.parametrize("cause", list(_MALFORMED))
+def test_decode_fails_the_job_naming_the_cause(spark, cause):
+    # Malformed input is not decoded into nulls or a plausible value: the
+    # job fails, and the error carries the same cause as wire_decode's.
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sparkstreaming_quickstart_spark.streaming.avro_wire import decode_confluent_avro, wire_decode
+
+    with pytest.raises(ValueError, match=cause):
+        wire_decode(_MALFORMED[cause], {1: "string"})
+    good = b"\x00\x00\x00\x00\x01\x04ok"
+    df = spark.createDataFrame([(good,), (_MALFORMED[cause],)], "value binary")
+    decoded = decode_confluent_avro(df, StructType([StructField("s", StringType())]), {1: "string"})
+    with pytest.raises(Exception, match=f"IllegalArgumentException: .*{cause}"):
+        decoded.collect()
+
+
+def test_package_jar_without_javac_is_one_line_error(tmp_path, monkeypatch):
+    # A JVM without a compiler (a JRE) gets a one-line RuntimeError naming
+    # the javac it looked for; there is no other decode route to fall back to.
+    import tempfile
+    from types import SimpleNamespace
+
+    from sparkstreaming_quickstart_spark import session
+
+    jre = tmp_path / "jre"
+    jre.mkdir()
+    props = {"java.home": str(jre), "java.version": "17-jre", "java.class.path": ""}
+    system = SimpleNamespace(getProperty=props.__getitem__)
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(
+        applicationId="app-without-javac", _jvm=SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with pytest.raises(RuntimeError) as err:
+        session.add_package_jar(fake)
+    assert f"{jre}/bin/javac" in str(err.value) and "\n" not in str(err.value)
+    assert list(tmp_path.iterdir()) == [jre]
+
+
+def test_package_jar_compiles_and_adds_once(spark, monkeypatch):
+    # The first call in an application builds (or reuses) the jar and adds
+    # it; a second call neither runs javac nor adds the jar again.
+    from sparkstreaming_quickstart_spark import session
+
+    session.add_package_jar(spark)
+
+    def no_javac(*args, **kwargs):
+        raise AssertionError(f"compiled again: {args}")
+
+    added = []
+    monkeypatch.setattr(session.subprocess, "run", no_javac)
+    monkeypatch.setattr(spark, "sql", lambda text: added.append(text))
+    session.add_package_jar(spark)
+    assert added == []
+    assert any("ssq-jvm-" in j for j in spark.sparkContext._jsc.sc().listJars().mkString(",").split(","))
 
 
 def test_streaming_wire_decode_end_to_end(spark, tmp_path):
